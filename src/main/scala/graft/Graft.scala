@@ -204,7 +204,7 @@ object Graft {
     * lost partitions. That is the right trade for bounded intra-query
     * reuse; a frame SHARED across queries or held long-lived should
     * instead cache() and unpersist in a try/finally at the call site
-    * (see analytics.CompareAssets.compare).
+    * (see Dashboard.run).
     *
     * Every plan materialized here is audited against the
     * no-single-task-window invariant first ([[plans.WindowAudit]]): a

@@ -1,26 +1,34 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 /** X3: the reference's compare_two_assets façade
-  * (similarity.py:440-530) — align two calendar-aligned price series
-  * positionally (keep positions where BOTH are non-null and > 0),
-  * compute technical-variant log returns on each aligned series, then
-  * all four similarity measures over the returns.
+  * (similarity.py:440-530).
   *
-  * Returns the all-zero result when fewer than 2 aligned points
-  * (similarity.py:503-512). One job: a date join + window + one
-  * multi-aggregate pass. DTW dispatches on series length: at or below
-  * `collectLimit` points the pair's return arrays collect to the
-  * driver and the kernel runs locally (the reference's regime,
-  * ~1.8k points); above it the points stay on the cluster and the
-  * kernel runs inside a typed [[DtwPairAggregator]] on the final
-  * aggregate task — the driver only receives the scalar. Both paths
-  * feed the identical sorted arrays to [[Dtw.distance]], so the
-  * dispatch is invisible in the result (InvariantsSpec property-checks
-  * the equality).
+  * Semantics are those of an inner join of the two series on date:
+  *  - a date aligns when both series have a row at it whose close is
+  *    non-null and > 0 (Spark's ordering, so NaN counts as > 0); null
+  *    dates never align;
+  *  - aligned dates are taken in the date column's native order;
+  *  - a date that repeats within one series and aligns is an error, as
+  *    the join would pair its rows in no defined order;
+  *  - technical log returns over consecutive aligned dates feed
+  *    euclidean, the two-pass Pearson, cosine and banded DTW; fewer than
+  *    2 aligned dates give [[Zero]] (similarity.py:503-512).
+  *
+  * Cost: one scan of the pair's (date, close) rows. A pair of fewer than
+  * `2·collectLimit + 2` valid rows is collected and [[kernel]] runs on
+  * the driver; a larger pair runs the same kernel inside
+  * [[PairSimilarityAggregator]] on the final aggregate task, and the
+  * driver receives only the result. The kernel's answer does not depend
+  * on row order, so the two placements agree bit for bit on every field.
   */
 object CompareAssets {
 
@@ -29,56 +37,111 @@ object CompareAssets {
 
   val Zero: SimilarityResult = SimilarityResult(0.0, 0.0, 0.0, 0.0, 0L)
 
-  /** `bars`: long table with (dateCol, keyCol, valueCol), calendar-aligned. */
+  /** One valid row of the pair: (in series A, in series B, date, close).
+    * A row is in both series when the two keys are equal. */
+  type PairRow[D] = (Boolean, Boolean, D, Double)
+
+  /** Spark's binary string order (UTF-8 bytes), which differs from
+    * `String.compareTo` above the surrogate range. */
+  private val binaryStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(x: String, y: String): Int =
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+  }
+
+  /** `bars`: long table with (dateCol, keyCol, valueCol). The date
+    * column is an integral, date, timestamp or string column. */
   def compare(bars: DataFrame, keyA: String, keyB: String,
       keyCol: String = "symbol", dateCol: String = "date",
       valueCol: String = "close", collectLimit: Long = 4096L): SimilarityResult = {
-    val spark = bars.sparkSession
-    import spark.implicits._
-
-    val a = bars.filter(col(keyCol) === keyA)
-      .select(col(dateCol).as("d"), col(valueCol).as("pa"))
-    val b = bars.filter(col(keyCol) === keyB)
-      .select(col(dateCol).as("d"), col(valueCol).as("pb"))
-    val aligned = a.join(b, "d")
-      .filter(col("pa").isNotNull && col("pb").isNotNull &&
-        col("pa") > 0 && col("pb") > 0)
-
-    val w = Window.orderBy("d")
-    // technical-variant returns over ALIGNED positions (0.0 on invalid
-    // pairs — technical.py:151-153); aligned values are all positive, so
-    // only the ratio path fires.
-    val rets = aligned
-      .withColumn("prev_a", lag(col("pa"), 1).over(w))
-      .withColumn("prev_b", lag(col("pb"), 1).over(w))
-      .filter(col("prev_a").isNotNull)
-      .select(col("d"),
-        when(col("pa") > 0 && col("prev_a") > 0, log(col("pa") / col("prev_a")))
-          .otherwise(0.0).as("a"),
-        when(col("pb") > 0 && col("prev_b") > 0, log(col("pb") / col("prev_b")))
-          .otherwise(0.0).as("b"))
-      .cache()
-
-    try {
-      val n = rets.count()
-      if (n < 1 || aligned.count() < 2) return Zero
-      val m = Similarity.metrics(rets.select("a", "b")).head()
-      val dtw =
-        if (n <= collectLimit) {
-          val arrs = rets.orderBy("d").select("a", "b").as[(Double, Double)].collect()
-          Dtw.distance(arrs.map(_._1), arrs.map(_._2))
-        } else
-          rets.select(row_number().over(w).cast("long").as("pos"),
-              col("a"), col("b"))
-            .as[(Long, Double, Double)]
-            .select(DtwPairAggregator.column())
-            .head()
-      SimilarityResult(
-        euclidean = m.getAs[Double]("euclidean"),
-        pearson = m.getAs[Double]("pearson"),
-        dtw = dtw,
-        cosine = m.getAs[Double]("cosine"),
-        n_points = n)
-    } finally rets.unpersist()
+    val v = col(valueCol)
+    val pair = bars
+      .filter(col(keyCol).isin(keyA, keyB) && col(dateCol).isNotNull &&
+        v.isNotNull && v > 0)
+    def rows(date: Column): DataFrame = pair.select((col(keyCol) === keyA).as("in_a"),
+      (col(keyCol) === keyB).as("in_b"), date.as("d"), v.cast(DoubleType).as("v"))
+    bars.schema(dateCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        run[Long](rows(col(dateCol).cast(LongType)), collectLimit)
+      case DateType => run[Long](rows(unix_date(col(dateCol)).cast(LongType)), collectLimit)
+      case TimestampType => run[Long](rows(unix_micros(col(dateCol))), collectLimit)
+      case StringType => run[String](rows(col(dateCol)), collectLimit)(
+        implicitly, binaryStringOrder)
+      case t => throw new IllegalArgumentException(
+        s"compare: date column $dateCol has unsupported type $t")
+    }
   }
+
+  private def run[D: TypeTag: Ordering](rows: DataFrame, collectLimit: Long): SimilarityResult = {
+    val typed: Dataset[PairRow[D]] = rows.as(ExpressionEncoder[PairRow[D]]())
+    val cap = if (collectLimit >= Int.MaxValue / 2) Int.MaxValue else (2 * collectLimit + 2).toInt
+    val head = typed.limit(cap).collect()
+    if (head.length < cap) kernel(head)
+    else typed.select(PairSimilarityAggregator.column[D]).head()
+  }
+
+  /** The whole computation over the pair's valid rows, in any order. */
+  def kernel[D](rows: Iterable[PairRow[D]])(implicit ord: Ordering[D]): SimilarityResult = {
+    val a = mutable.HashMap.empty[D, Double]
+    val b = mutable.HashMap.empty[D, Double]
+    val repeated = mutable.HashSet.empty[D]
+    rows.foreach { case (inA, inB, d, v) =>
+      if (inA && a.put(d, v).isDefined) repeated += d
+      if (inB && b.put(d, v).isDefined) repeated += d
+    }
+    val dates = a.keys.filter(b.contains).toVector.sorted
+    dates.find(repeated).foreach(d => throw new IllegalArgumentException(
+      s"compare: date $d repeats within one series of the pair"))
+    val n = dates.length - 1
+    if (n < 1) return Zero
+    // Spark's log is StrictMath.log; aligned closes are > 0, so the
+    // ratio branch of the technical return (technical.py:151-153) is
+    // the only one taken.
+    val ra = Array.tabulate(n)(i => StrictMath.log(a(dates(i + 1)) / a(dates(i))))
+    val rb = Array.tabulate(n)(i => StrictMath.log(b(dates(i + 1)) / b(dates(i))))
+    var sq = 0.0
+    var dot = 0.0
+    var aa = 0.0
+    var bb = 0.0
+    var i = 0
+    while (i < n) {
+      val d = ra(i) - rb(i)
+      sq += d * d; dot += ra(i) * rb(i); aa += ra(i) * ra(i); bb += rb(i) * rb(i)
+      i += 1
+    }
+    val normA = math.sqrt(aa)
+    val normB = math.sqrt(bb)
+    SimilarityResult(
+      euclidean = math.sqrt(sq),
+      pearson = Similarity.pearsonKernel(ra, rb),
+      dtw = Dtw.distance(ra, rb),
+      cosine = if (normA == 0.0 || normB == 0.0) 0.0 else dot / (normA * normB),
+      n_points = n)
+  }
+}
+
+/** [[CompareAssets.kernel]] as a typed `Aggregator`, for pairs too long
+  * to collect. Rows arrive in any order on any partitioning: buffers
+  * concatenate under `merge` and `finish` runs the kernel in the final
+  * aggregate task. Memory is one pair's rows on one executor. Grouped by
+  * a pair key (`groupByKey(...).agg(column[D])`), pairs aggregate in
+  * parallel.
+  */
+class PairSimilarityAggregator[D](rowsEncoder: Encoder[Vector[CompareAssets.PairRow[D]]])(
+    implicit ord: Ordering[D])
+    extends Aggregator[CompareAssets.PairRow[D], Vector[CompareAssets.PairRow[D]],
+      CompareAssets.SimilarityResult] {
+  import CompareAssets.{PairRow, SimilarityResult}
+
+  override def zero: Vector[PairRow[D]] = Vector.empty
+  override def reduce(buf: Vector[PairRow[D]], x: PairRow[D]): Vector[PairRow[D]] = buf :+ x
+  override def merge(x: Vector[PairRow[D]], y: Vector[PairRow[D]]): Vector[PairRow[D]] = x ++ y
+  override def finish(buf: Vector[PairRow[D]]): SimilarityResult = CompareAssets.kernel(buf)
+  override def bufferEncoder: Encoder[Vector[PairRow[D]]] = rowsEncoder
+  override def outputEncoder: Encoder[SimilarityResult] = Encoders.product[SimilarityResult]
+}
+
+object PairSimilarityAggregator {
+  def column[D: TypeTag: Ordering]: TypedColumn[CompareAssets.PairRow[D], CompareAssets.SimilarityResult] =
+    new PairSimilarityAggregator[D](ExpressionEncoder[Vector[CompareAssets.PairRow[D]]]())
+      .toColumn.name("similarity")
 }

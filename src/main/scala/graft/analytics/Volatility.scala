@@ -22,15 +22,25 @@ object Volatility {
   /** A4 (volatility.py:63-121): annualized vol = stddev_samp(log returns)
     * × √252 per series; 0.0 when fewer than 2 returns. */
   def annualized(df: DataFrame, price: Column, keys: Seq[String],
-      order: Seq[Column]): DataFrame = {
-    val ret = Technical.logReturnStrict(price, keys, order)
-    val vols = df.withColumn("ret", ret)
+      order: Seq[Column]): DataFrame =
+    fromReturns(logReturns(df, price, keys, order), df, keys)
+
+  /** `df` plus the strict log return `ret` (volatility.py:30-56), rows
+    * without a valid return dropped. */
+  def logReturns(df: DataFrame, price: Column, keys: Seq[String],
+      order: Seq[Column]): DataFrame =
+    df.withColumn("ret", Technical.logReturnStrict(price, keys, order))
       .filter(col("ret").isNotNull)
+
+  /** [[annualized]] from [[logReturns]]' output; `series` holds every
+    * key that gets a vol. */
+  def fromReturns(rets: DataFrame, series: DataFrame, keys: Seq[String]): DataFrame = {
+    val vols = rets
       .groupBy(keys.map(col): _*)
       .agg((stddev_samp(col("ret")) * sqrt(lit(TradingDays.toDouble))).as("vol0"))
     // Series with <2 valid returns must yield 0.0, not disappear
     // (volatility.py:102-103) — re-join against the full key set.
-    df.select(keys.map(col): _*).distinct()
+    series.select(keys.map(col): _*).distinct()
       .join(vols, keys, "left")
       .withColumn("vol", coalesce(col("vol0"), lit(0.0)))
       .drop("vol0")

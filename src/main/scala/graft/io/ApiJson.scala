@@ -48,11 +48,13 @@ object ApiJson {
       .setScale(dp, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** `/api/symbols` (app.py:156-159): sorted symbol list. */
-  def symbols(bars: DataFrame, keyCol: String = "symbol"): String = {
-    val syms = bars.select(col(keyCol)).distinct()
-      .orderBy(keyCol).collect().map(_.getString(0))
+  def symbols(bars: DataFrame, keyCol: String = "symbol"): String =
+    symbols(bars.select(col(keyCol)).distinct()
+      .orderBy(keyCol).collect().map(_.getString(0)).toSeq)
+
+  /** `/api/symbols` from an already-collected, sorted symbol list. */
+  def symbols(syms: Seq[String]): String =
     s"""{"symbols": [${syms.map(jstr).mkString(", ")}]}"""
-  }
 
   /** `/api/heatmap` (app.py:322-353): dense correlation matrix from the
     * engine's long-form heatmap frame (ka, kb, corr — diag included).

@@ -6,25 +6,25 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Independent-engine anchor for LONG-series DTW — the regime the
-  * `CompareAssets` collect threshold guards (> 4096 points), which the
-  * x1/x2 oracle rows never reach (replicas add series, not length;
-  * their wavefront oracles run on ~70-point series) and which
-  * [[DtwScale]] covers only with an N-version SELF-oracle: both
-  * dispatch arms are this repo's code, so a shared kernel bug passes
-  * both. This harness closes that gap for one sampled ~5k-point pair:
+/** Independent-engine anchor for LONG-series DTW — the regime above the
+  * `CompareAssets` collect threshold (> 4096 points), which the x1/x2
+  * oracle rows never reach (replicas add series, not length; their
+  * wavefront oracles run on ~70-point series) and which [[DtwScale]]
+  * covers only with an N-version SELF-oracle: both placements are this
+  * repo's code, so a shared kernel bug passes both. This harness closes
+  * that gap for one sampled ~5k-point pair:
   *
   *  1. builds the pair from replica/sf events exactly as [[DtwScale]]
   *     does (symbol = user_id % groups, per-key arrival position);
-  *  2. runs BOTH dispatch arms ([[CompareAssets.compare]] with
+  *  2. runs BOTH placements ([[CompareAssets.compare]] with
   *     collectLimit forced to ±∞) — bit-identical dtw + n_points
-  *     required (what the anchor pins); the distributed side metrics
-  *     are held to the catalog's round-6 contract;
-  *  3. dumps the exact aligned log-return series the arms consumed
-  *     (pos, a, b) to parquet, re-deriving the prep with the same plan
-  *     `compare` builds internally and failing loudly if the dumped
-  *     row count disagrees with the arms' n_points;
-  *  4. prints one JSON line with both arm values and the kernel's band
+  *     required (what the anchor pins); the side metrics are held to
+  *     the catalog's round-6 contract;
+  *  3. dumps the aligned log-return series (pos, a, b) to parquet,
+  *     derived independently of `compare` by the date join + window
+  *     formulation, and fails loudly if the dumped row count disagrees
+  *     with the placements' n_points;
+  *  4. prints one JSON line with both values and the kernel's band
   *     width — `scripts/dtw_anchor_check.py` then replays the banded
   *     DP as a DuckDB recursive-CTE wavefront (the x1 oracle shape,
   *     reference algorithms/similarity.py:200-352) over the dumped
@@ -66,14 +66,9 @@ object DtwAnchor {
     val agg = CompareAssets.compare(bars, "0", "1",
       valueCol = "value", collectLimit = 0L)
     val wallA = (System.nanoTime() - t1) / 1e9
-    // The gate pins what the anchor is FOR: the DTW value (bit-exact —
-    // both arms feed the identical sorted series into the same kernel)
-    // and the aligned-point count. The side metrics (euclidean/pearson/
-    // cosine) are float AGGREGATES from two separate distributed runs of
-    // Similarity.metrics, whose shuffle-merge order is not guaranteed
-    // deterministic; full case-class equality could fail on a ULP
-    // difference in a metric the anchor does not pin — a false red. They
-    // are held to the catalog's round-6 comparability contract instead.
+    // The gate pins what the anchor is FOR: the DTW value and the
+    // aligned-point count, bit-exact. The side metrics are held to the
+    // catalog's round-6 comparability contract.
     val r6 = (x: Double) => math.floor(x * 1e6 + 0.5) / 1e6
     val armsIdentical =
       collected.dtw == agg.dtw && collected.n_points == agg.n_points
@@ -82,8 +77,8 @@ object DtwAnchor {
       r6(collected.pearson) == r6(agg.pearson) &&
       r6(collected.cosine) == r6(agg.cosine)
 
-    // Dump the aligned return series the arms consumed — the same
-    // join/filter/lag plan compare builds (CompareAssets.scala:39-59).
+    // Dump the aligned return series by the date join + window
+    // formulation, independent of compare's own scan.
     val a = bars.filter(col("symbol") === "0")
       .select(col("date").as("d"), col("value").as("pa"))
     val b = bars.filter(col("symbol") === "1")

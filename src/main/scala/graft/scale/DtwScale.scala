@@ -6,23 +6,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Replica-scale N-version verification of the DTW dispatch — the
-  * benchmarks/timing.py:104-134 cross-implementation pattern applied to
-  * the one kernel whose replica-scale code path nothing else exercises.
+/** Replica-scale N-version verification of `CompareAssets.compare`'s two
+  * placements — the benchmarks/timing.py:104-134 cross-implementation
+  * pattern applied to the path nothing else exercises at replica scale.
   *
-  * `CompareAssets.compare` dispatches DTW on series length: at or below
-  * `collectLimit` the pair collects to the driver and the kernel runs
-  * locally (the reference's ~1.8 k-point regime — the path every
-  * sf0.01/sf0.1 gate exercises); above it the points stay distributed
-  * and the kernel runs inside [[graft.analytics.DtwPairAggregator]] on
-  * the final aggregate task. This harness builds series HUNDREDS of
-  * times past the threshold from a scale replica's events (key =
-  * user_id % groups, value series aligned by per-key position), runs
-  * the SAME pair through BOTH dispatch arms by forcing `collectLimit`
-  * to ±∞, and requires every result field bit-identical. InvariantsSpec
-  * property-checks this equality at fixture scale; here it holds on
-  * real replica series where the Aggregator's merge/sort actually spans
-  * many partitions.
+  * A pair below `collectLimit` is collected and the kernel runs on the
+  * driver; a longer pair stays distributed and the same kernel runs
+  * inside [[graft.analytics.PairSimilarityAggregator]] on the final
+  * aggregate task. This harness builds series hundreds of times past the
+  * threshold from a scale replica's events (key = user_id % groups,
+  * value series aligned by per-key position), runs the same pair through
+  * both placements by forcing `collectLimit` to ±∞, and requires every
+  * result field bit-identical. InvariantsSpec and CompareAssetsSpec
+  * check this at fixture scale; here the aggregator's merge spans many
+  * partitions of real replica series.
   *
   * Usage: runMain graft.scale.DtwScale <sfDir> [maxUser=6000] [groups=4]
   */
@@ -66,8 +63,8 @@ object DtwScale {
       val agg = CompareAssets.compare(bars, i.toString, j.toString,
         valueCol = "value", collectLimit = 0L)
       val wallA = (System.nanoTime() - t1) / 1e9
-      // Bit-identical, not approximately equal: both arms must feed the
-      // same sorted arrays to the same kernel.
+      // Bit-identical, not approximately equal: both arms run the same
+      // kernel on the same rows.
       val same = collected == agg
       identical &= same
       System.err.println(f"[dtw-scale] pair ($i,$j): n=${agg.n_points} " +

@@ -39,31 +39,38 @@ class InvariantsSpec extends SparkSpec {
     }
   }
 
-  test("DTW typed aggregator equals the driver kernel on shuffled multi-partition input") {
+  test("pair aggregator equals the driver kernel on any partitioning") {
+    import graft.analytics.{CompareAssets, PairSimilarityAggregator}
+    def pairRows(seed: Int, n: Int): Seq[(Boolean, Boolean, Long, Double)] = {
+      val a = randSeries(seed, n).map(x => math.abs(x) + 1.0)
+      val b = randSeries(seed + 500, n).map(x => math.abs(x) + 1.0)
+      // date gaps on each side: only the common dates align
+      (0 until n).flatMap { i =>
+        (if (i % 7 != 3) Seq((true, false, i.toLong, a(i))) else Nil) ++
+          (if (i % 5 != 1) Seq((false, true, i.toLong, b(i))) else Nil)
+      }
+    }
     (1 to 5).foreach { seed =>
-      val n = 50 + seed * 37
-      val a = randSeries(seed, n).toArray
-      val b = randSeries(seed + 500, n).toArray
-      val expect = Dtw.distance(a, b)
+      val rows = pairRows(seed, 50 + seed * 37)
+      val expect = CompareAssets.kernel(rows)
+      assert(expect.n_points > 1)
       // rows arrive out of order and across 7 partitions: merge must
-      // re-assemble the series exactly
-      val shuffled = new scala.util.Random(seed).shuffle((0 until n).toList)
-      val ds = shuffled.map(i => (i.toLong, a(i), b(i))).toDS().repartition(7)
-      val got = ds.select(graft.analytics.DtwPairAggregator.column()).head()
-      assert(approx(got, expect, 1e-9), s"seed $seed: aggregator $got != kernel $expect")
+      // re-assemble both series exactly
+      val ds = new scala.util.Random(seed).shuffle(rows).toDS().repartition(7)
+      val got = ds.select(PairSimilarityAggregator.column[Long]).head()
+      assert(got == expect, s"seed $seed: aggregator $got != kernel $expect")
     }
     // grouped form: two pairs aggregate independently under one shuffle
-    val a1 = randSeries(11, 90).toArray; val b1 = randSeries(12, 90).toArray
-    val a2 = randSeries(13, 130).toArray; val b2 = randSeries(14, 130).toArray
-    val rows = (0 until 90).map(i => ("p1", i.toLong, a1(i), b1(i))) ++
-      (0 until 130).map(i => ("p2", i.toLong, a2(i), b2(i)))
-    val got = new scala.util.Random(7).shuffle(rows).toDS().repartition(5)
+    val p1 = pairRows(11, 90)
+    val p2 = pairRows(13, 130)
+    val got = new scala.util.Random(7).shuffle(p1.map(("p1", _)) ++ p2.map(("p2", _)))
+      .toDS().repartition(5)
       .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3, r._4))
-      .agg(graft.analytics.DtwPairAggregator.column())
+      .mapValues(_._2)
+      .agg(PairSimilarityAggregator.column[Long])
       .collect().toMap
-    assert(approx(got("p1"), Dtw.distance(a1, b1), 1e-9))
-    assert(approx(got("p2"), Dtw.distance(a2, b2), 1e-9))
+    assert(got("p1") == CompareAssets.kernel(p1))
+    assert(got("p2") == CompareAssets.kernel(p2))
   }
 
   test("forward fill is idempotent and only fills forward") {

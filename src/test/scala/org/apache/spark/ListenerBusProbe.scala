@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Test access to the listener bus, which Spark keeps package-private. */
+object ListenerBusProbe {
+  /** Blocks until every event posted so far has reached every listener. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
