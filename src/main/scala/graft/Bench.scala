@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 /** Benchmark main. Runs every `SparkEntry.queries` entry `SPARK_GRAFT_REPS`
   * times (default 3) after an untimed warmup and reports the per-query
   * MEDIAN (plus min, for noise diagnosis). Single-shot numbers on this
@@ -9,23 +12,11 @@ package graft
   * noisy-host run is visible in the artifact itself.
   */
 object Bench {
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(",")
-    catch { case _: Throwable => "" }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // Session config (cpus + SPARK_GRAFT_CONF A/B overlay, driver never
-    // sets the latter) resolves in ONE place shared with RepProbe and
-    // PlanDump (Graft.envSession), so dump/probe config provably matches
-    // bench config; RunEnv records the overlay in the artifact.
-    val spark = Graft.envSession()
-    val loadBefore = loadavg()
-    val stealBefore = RunEnv.stealTicks
-    // Untimed warmup: JIT/codegen/first-read costs land here, not on
-    // whichever query happens to run first.
+  /** Untimed warm-up: JIT/codegen/first-read costs land here, not on
+    * whichever query happens to run first. Returns the failures as
+    * `RunEnv.errorJson` entries for the artifact's `errors` array: the
+    * bench still runs after a failed warm-up, but its artifact says so. */
+  def warmup(spark: SparkSession, sfDir: String): Seq[String] =
     try {
       spark.range(1 << 20).selectExpr("sum(id)").collect()
       Seq("lineitem", "orders", "events", "documents", "embeddings")
@@ -44,7 +35,21 @@ object Bench {
         .flatMapGroups((_, it) => it.map(_._1)).count()
       tiny.join(tiny.select(col("id").as("id2")), col("id") === col("id2"))
         .count()
-    } catch { case _: Throwable => () }
+      Seq.empty
+    } catch { case NonFatal(e) => Seq(RunEnv.errorJson(e)) }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
+    // Session config (cpus + SPARK_GRAFT_CONF A/B overlay, driver never
+    // sets the latter) resolves in ONE place shared with RepProbe and
+    // PlanDump (Graft.envSession), so dump/probe config provably matches
+    // bench config; RunEnv records the overlay in the artifact.
+    val spark = Graft.envSession()
+    val loadBefore = RunEnv.loadavg
+    val stealBefore = RunEnv.stealTicks
+    val errors = warmup(spark, sfDir)
     val failed = scala.collection.mutable.ListBuffer[String]()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -110,7 +115,7 @@ object Bench {
       m.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val fs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = med.values.filter(_ >= 0).sum
-    val loadAfter = loadavg()
+    val loadAfter = RunEnv.loadavg
     // `env` makes the artifact self-describing (sha/cpus/reps/heap/GC —
     // r10 verdict item 1); the loadavg_* fields predate it and stay for
     // cross-round artifact compatibility.
@@ -118,7 +123,7 @@ object Bench {
     val stealTotal =
       if (stealBefore >= 0 && stealAfter >= stealBefore) (stealAfter - stealBefore) / 100.0 else -1.0
     val stealObj = s"""{"total_s":$stealTotal,"by_query":${obj(stealByQuery.toMap)}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${obj(med)},"queries_min":${obj(mins)},"failed":$fs,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal":$stealObj,"sf":"$sfDir","env":${RunEnv.json(cpus, reps)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${obj(med)},"queries_min":${obj(mins)},"failed":$fs,"errors":${errors.mkString("[", ",", "]")},"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal":$stealObj,"sf":"$sfDir","env":${RunEnv.json(cpus, reps)}}"""
     println(line)
     // The stdout line travels through sbt's [info] prefixing and the
     // driver's tail truncation; the file is the machine-parseable copy.

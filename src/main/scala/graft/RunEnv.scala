@@ -64,7 +64,17 @@ object RunEnv {
       .asScala.map(_.getName).toSeq
     catch { case _: Throwable => Seq.empty }
 
-  private def jq(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private def jq(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  /** One entry of an artifact's `errors` array: a failure that the run
+    * survived but must not hide. */
+  def errorJson(e: Throwable): String =
+    s"""{"class":${jq(e.getClass.getName)},"message":${jq(String.valueOf(e.getMessage))}}"""
 
   /** JIT/code-cache state at emit time, as one JSON object. The r13
     * driver bench regressed 28 queries 2-15x at local[32] with no plan
@@ -74,7 +84,9 @@ object RunEnv {
     * only records heap. This makes every future bench self-describing
     * on that axis: per-CodeHeap used/max/peak (a peak at max means the
     * sweeper hit the wall and compilation was throttled or disabled),
-    * metaspace used, and cumulative JIT compilation ms. */
+    * metaspace used, cumulative JIT compilation ms, and the compiler
+    * thread count in use with its origin (`ERGONOMIC` when the JVM sized
+    * it from the CPU count, `VM_CREATION` when a flag pinned it). */
   def jitJson: String =
     try {
       val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -88,7 +100,13 @@ object RunEnv {
       val comp = java.lang.management.ManagementFactory.getCompilationMXBean
       val compMs = if (comp != null && comp.isCompilationTimeMonitoringSupported)
         comp.getTotalCompilationTime else -1L
-      (pools :+ s""""jit_compile_ms":$compMs""").mkString("{", ",", "}")
+      val threads = java.lang.management.ManagementFactory
+        .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+        .getVMOption("CICompilerCount")
+      (pools ++ Seq(s""""jit_compile_ms":$compMs""",
+        s""""ci_compiler_count":${threads.getValue}""",
+        s""""ci_compiler_count_origin":${jq(threads.getOrigin.toString)}"""))
+        .mkString("{", ",", "}")
     } catch { case _: Throwable => "{}" }
 
   /** One JSON object with the run config an artifact needs to be

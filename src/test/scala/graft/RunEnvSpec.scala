@@ -1,14 +1,17 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Pins the run-env fingerprint every bench/correctness artifact embeds
   * ([[RunEnv]], r10 verdict item 1): all fields present, and the sha is
   * genuinely HEAD at write time — not a stale or hardcoded value. The
   * fields exist so cross-round comparisons stop reverse-engineering the
   * run config from loadavg; a fingerprint that lies would be worse than
-  * none. */
-class RunEnvSpec extends AnyFunSuite {
+  * none. Also pins that a bench warm-up failure is recorded, not
+  * swallowed. */
+class RunEnvSpec extends SparkSpec {
+
+  private val om = new ObjectMapper()
 
   test("env json carries sha/cpus/reps/heap/gc/java/loadavg, sha == HEAD") {
     val j = RunEnv.json(cpus = "32", reps = 3)
@@ -30,7 +33,6 @@ class RunEnvSpec extends AnyFunSuite {
     // loadavg: three comma-separated floats on this platform
     assert("\"loadavg\":\"[0-9.]+,[0-9.]+,[0-9.]+\"".r.findFirstIn(j).nonEmpty, j)
     // the fragment is itself valid JSON (it gets spliced into artifacts)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(j)
     for (f <- Seq("sha", "git_dirty", "cpus", "reps", "heap_max_mb", "gc", "java",
         "loadavg", "jit", "jvm_args", "conf_overlay", "only"))
@@ -50,5 +52,32 @@ class RunEnvSpec extends AnyFunSuite {
       }
     }
     assert(sawCodeHeap, s"no CodeHeap/Metaspace pool in jit telemetry: $jit")
+  }
+
+  test("jit json carries the compiler thread count in use and its origin") {
+    val jit = om.readTree(RunEnv.json(cpus = "4", reps = 1)).get("jit")
+    assert(jit.has("ci_compiler_count") && jit.get("ci_compiler_count").asInt() > 0, jit)
+    val origin = Option(jit.get("ci_compiler_count_origin")).map(_.asText())
+      .getOrElse(fail(s"ci_compiler_count_origin missing in $jit"))
+    // build.sbt pins no count, so the JVM sizes the pool from the CPU
+    // count unless the local A/B hook overrides flags
+    if (!sys.env.contains("SPARK_GRAFT_JVM_OPTS"))
+      assert(origin == "ERGONOMIC", s"compiler count pinned by a flag: $jit")
+  }
+
+  test("error entries are valid JSON holding the exception class and message") {
+    val e = om.readTree(RunEnv.errorJson(new IllegalStateException("line 1\n\t\"q\" \\ x")))
+    assert(e.get("class").asText() == "java.lang.IllegalStateException")
+    assert(e.get("message").asText() == "line 1\n\t\"q\" \\ x")
+  }
+
+  test("bench warm-up: no errors on a clean run, the failure recorded otherwise") {
+    assert(Bench.warmup(spark, "/root/testdata/sf0.001") == Seq.empty)
+    val missing = java.nio.file.Files.createTempDirectory("graftwarmup").resolve("absent")
+    val errors = Bench.warmup(spark, missing.toString)
+    assert(errors.size == 1, errors)
+    val e = om.readTree(errors.head)
+    assert(e.get("class").asText().endsWith("AnalysisException"), e)
+    assert(e.get("message").asText().contains("absent"), e)
   }
 }
