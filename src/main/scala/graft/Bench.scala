@@ -40,12 +40,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // Session config (cpus + SPARK_GRAFT_CONF A/B overlay, driver never
-    // sets the latter) resolves in ONE place shared with RepProbe and
-    // PlanDump (Graft.envSession), so dump/probe config provably matches
-    // bench config; RunEnv records the overlay in the artifact.
     val spark = Graft.envSession()
     val loadBefore = RunEnv.loadavg
     val stealBefore = RunEnv.stealTicks
@@ -82,25 +77,12 @@ object Bench {
           }
           None
         } finally {
-          // Cache-honesty (untimed): this release applies to EVERY
-          // Graft.materialize/materializeDisk-backed query — ~20 call
-          // sites across operators/ (the g-family graph queries, e10,
-          // t21, t37, f15, f18, t40, d9, ...), not just f18. Without it
-          // a materialize-backed query reads its own checkpoint/columnar
-          // blocks warm on reps after the first (persist-backed plans
-          // additionally plan-match the CacheManager), and the headline
-          // median lands ~1.5-3x flatter than the cold number a fresh
-          // session pays (measured movers at sf0.1: f18 0.97->2.59 s,
-          // e10 2.83x, g1 1.85x, t37 1.74x). From r12 on every rep is
-          // cold-equivalent; artifacts before r12 report warm medians
-          // for the whole materialize-backed class, so cross-round
-          // per-query diffs for that class must baseline at r12's
-          // artifact (bench_sf01_r12.json), not r11's.
-          // MUST be blocking: a fire-and-forget sweep executes its
-          // block removals on the worker threads DURING the next timed
-          // rep — measured at local[4]/sf0.1 as a broad 1.1-1.2x wall
-          // inflation with 2-4x spikes on checkpoint-heavy small
-          // queries. Blocking puts that work in this untimed gap.
+          // Cache honesty (untimed): every rep starts with no
+          // materialized frame of an earlier rep, so each rep pays the
+          // cold cost a fresh session pays. Blocking, so no block removal
+          // runs on the workers during the next timed rep. Medians of the
+          // materialize-backed queries before bench_sf01_r12.json are
+          // warm and do not compare (SCALE_r12.md).
           Graft.releaseMaterialized(spark, blocking = true)
         }
       }
@@ -123,7 +105,7 @@ object Bench {
     val stealTotal =
       if (stealBefore >= 0 && stealAfter >= stealBefore) (stealAfter - stealBefore) / 100.0 else -1.0
     val stealObj = s"""{"total_s":$stealTotal,"by_query":${obj(stealByQuery.toMap)}}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${obj(med)},"queries_min":${obj(mins)},"failed":$fs,"errors":${errors.mkString("[", ",", "]")},"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal":$stealObj,"sf":"$sfDir","env":${RunEnv.json(cpus, reps)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":${obj(med)},"queries_min":${obj(mins)},"failed":$fs,"errors":${errors.mkString("[", ",", "]")},"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","steal":$stealObj,"sf":"$sfDir","env":${RunEnv.json(Graft.cpus, reps)}}"""
     println(line)
     // The stdout line travels through sbt's [info] prefixing and the
     // driver's tail truncation; the file is the machine-parseable copy.

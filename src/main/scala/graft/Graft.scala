@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Shared session + IO helpers for the graft engine.
   *
   * Scale posture: every knob here is chosen so the same code runs on
-  * local[32] for tests and on a 1000-executor cluster unchanged — AQE
+  * local[4] for tests and on a 1000-executor cluster unchanged — AQE
   * handles runtime re-planning (partition coalescing, skew-join splitting),
   * and shuffle partitions default to the local core count only when no
   * cluster manager overrides it.
@@ -15,83 +15,57 @@ object Graft {
   /** One query of the engine: (session, sf-dir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** Standard config applied to every entry-point session (Verify, Bench,
-    * tests). ANSI off: the reference's semantics are permissive (nulls, 0.0
-    * fallbacks — SURVEY.md §7.4.6), and the DuckDB oracle queries are written
-    * to guard their own domains.
-    */
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** Standard config of every session. ANSI off: the reference's
+    * semantics are permissive (nulls, 0.0 fallbacks — SURVEY.md §7.4.6),
+    * and the DuckDB oracle queries guard their own domains. */
+  private val standardConf: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // events.parquet carries ns timestamps, which Spark 4 otherwise refuses
     // (PARQUET_TYPE_ILLEGAL); as a long it keeps full ns precision — convert
     // with timestamp_micros(ts/1000) where a real timestamp is needed.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Scan-split sizing for THIS deployment's data scale. The defaults
-    // (128 MB partitions, 4 MB per-file open cost) target HDFS-block-sized
-    // files; the sandbox's tables are 10–125 MB in ≤8-file directories,
-    // which the default packing collapses into 1–2 scan partitions — a
-    // serialized parquet decode on a 32-thread host (measured: the sf1
-    // events table, 18 MB across 8 files, scanned as ONE task). 8 MB
-    // splits / 512 KB open cost restore scan parallelism at every sandbox
-    // SF while keeping partitions far above per-task overhead. These are
-    // runtime session confs, not code semantics: a 100 TB cluster
-    // deployment reading block-sized files should keep the 128 MB
-    // default — builders for such a deployment pass their own sizing
-    // after configure() (builder config is last-write-wins).
-    .config("spark.sql.files.maxPartitionBytes", "8m")
-    .config("spark.sql.files.openCostInBytes", "524288")
-    // Codegen class cache (static conf, default 100 entries). The r13
-    // RepProbe localized a 4-30x per-rep CPU inflation on the complex
-    // dedup queries (d10: identical final plan, identical row counts,
-    // same 64-task stage burning 84-258 CPU-s in random reps vs ~4 s in
-    // others, zero GC, host-throttle sentinel flat) to codegen-cache
-    // thrash: one execution of a window+join-heavy query generates more
-    // distinct codegen units (WSCG stages, projections, orderings,
-    // predicates) than the 100-entry LRU holds, so re-execution misses,
-    // Janino recompiles, and the fresh class runs INTERPRETED until C2
-    // re-warms - the interpreted md5/levenshtein/window inner loops are
-    // the 30x. At 4096 entries the same probe settles to flat ~3 s reps
-    // after first-rep JIT. Executors at cluster scale hit the identical
-    // cache in CodeGenerator.compile, so this is a 100 TB knob too, not
-    // a bench cosmetic. Memory: entries are (source, compiled class)
-    // pairs, ~tens of KB each - bounded well under the driver heap.
-    .config("spark.sql.codegen.cache.maxEntries", "4096")
-    .config("spark.ui.enabled", "false")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Scan splits sized for tables of 10–125 MB in <= 8 files: every table
+    // scans as several tasks instead of the 1–2 the HDFS-block defaults
+    // (128 MB / 4 MB open cost) pack it into, and each split stays far
+    // above per-task overhead (SCALE_r05.md). A deployment reading
+    // block-sized files passes its own sizing as `conf` or
+    // `SPARK_GRAFT_CONF`.
+    "spark.sql.files.maxPartitionBytes" -> "8m",
+    "spark.sql.files.openCostInBytes" -> "524288",
+    // The codegen class cache (static conf, default 100) holds every
+    // generated unit of one execution of the catalog's largest queries,
+    // so a re-execution hits the cache instead of recompiling and
+    // running interpreted until the JIT warms again. Entries are tens
+    // of KB each (measurements in OPTIMIZATION_r13.md and _r14.md).
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.ui.enabled" -> "false")
 
-  /** One shared resolution of the measurement-session config for every
-    * diagnostic/bench main (Bench, RepProbe, PlanDump, StageProbe):
-    * `SPARK_GRAFT_CPUS` (default 4 — the bench convention, so a dumped
-    * plan provably matches the plan the default bench runs) sets both
-    * the local[] thread count and shuffle partitions, and
-    * `SPARK_GRAFT_CONF` ("k=v;k2=v2", never set by the driver) overlays
-    * session confs last-write-wins for config A/B without recompiling.
-    * RunEnv embeds the overlay string in emitted artifacts, so an
-    * A/B-configured run is self-describing. */
-  def envSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    var builder = configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder = builder.config(k.trim, v.trim)
-      })
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The local[] thread count and shuffle-partition count of every
+    * session: `SPARK_GRAFT_CPUS`, default 4. Artifacts record this value
+    * (`RunEnv.json`), so they say what ran. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** Local session for tests / ad-hoc mains. */
-  def localSession(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
-    val s = configure(
-      SparkSession.builder().master(s"local[$cores]").appName("graft")
-        .config("spark.sql.shuffle.partitions", cores.toString))
+  /** The one session builder of the engine: every main, the test fixture
+    * and the benchmark build their session here. Config applies in this
+    * order, later writes winning: the standard config, then
+    * `local[cpus]` and `cpus` shuffle partitions, then the caller's
+    * `conf` pairs, then the `SPARK_GRAFT_CONF` overlay ("k=v;k2=v2",
+    * for config A/B without recompiling; `RunEnv` records it in every
+    * artifact). With no `conf`, a dumped plan, a probe and the bench
+    * run the same config. */
+  def envSession(conf: (String, String)*): SparkSession = {
+    val overlay = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k.trim -> v.trim }
+    val settings = standardConf ++ Seq("spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus) ++ conf ++ overlay
+    val s = settings.foldLeft(SparkSession.builder()
+        .withExtensions(new graft.functions.GraftExtensions)) {
+      case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -220,69 +194,44 @@ object Graft {
     df.localCheckpoint(false)
   }
 
-  /** [[materialize]] for frames whose tens of millions of rows held as
-    * deserialized heap checkpoint blocks turn into full-GC pressure on
-    * every consumer pass: `persist(DISK_ONLY)` stores the frame as
-    * COLUMNAR compressed batches on executor-local disk — zero heap
-    * pinned, compact, column-pruned scans per consumer. The storage
-    * FORMAT is what matters, not just the medium: a
-    * `localCheckpoint(DISK_ONLY)` stores raw row-blob RDD blocks and
-    * measured WORSE than the heap checkpoint on the same frame
-    * (scale.F18Ab at sf10, bench/bench_sf10_f18_ab_r11.json, 5 reps
-    * within one run: heap checkpoint 32.9 s median w/ 93 s full-GC
-    * spike, row-blob disk checkpoint 48.1 s, columnar DISK_ONLY persist
-    * 15.6 s flat, recompute-per-consumer 18.3 s).
+  /** [[materialize]] for large multi-consumer frames (tens of millions
+    * of rows) whose heap checkpoint blocks would turn into full-GC
+    * pressure: `persist(DISK_ONLY)` stores the frame as columnar
+    * compressed batches on executor-local disk, so it pins no heap and
+    * each consumer scans only its columns. The storage format is the
+    * point, not the medium: a row-blob `localCheckpoint(DISK_ONLY)` is
+    * slower than the heap checkpoint (SCALE_r11.md,
+    * `bench/bench_sf10_f18_ab_r11.json`).
     *
-    * Lifecycle trade vs the checkpoint flavor: the CacheManager entry
-    * lives until session end (query-internal code has no place to
-    * unpersist), but DISK_ONLY pins no executor memory — the cost is
-    * bounded local-disk space, the same resource the frame's shuffle
-    * already budgets. Right for a handful of large multi-consumer
-    * frames; the heap [[materialize]] stays the default for the
-    * catalog's typical sub-GB intermediates (in-memory reads win
-    * there, and t21 showed the per-frame trade must be measured, not
-    * assumed). Same WindowAudit enforcement as [[materialize]]. */
+    * The CacheManager entry lives until [[releaseMaterialized]] or
+    * session end, bounded by local disk, the resource the frame's
+    * shuffle already uses. The heap [[materialize]] stays the default
+    * for sub-GB intermediates, where in-memory reads win. Same
+    * WindowAudit enforcement as [[materialize]]. */
   def materializeDisk(df: DataFrame): DataFrame = {
     graft.plans.WindowAudit.assertNoSingleTaskWindow(df, "Graft.materializeDisk")
     df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
   }
 
-  /** Scoped release for every frame [[materialize]]/[[materializeDisk]]
-    * pinned during one query execution — the lifetime policy for
-    * query-internal materialization (query code has no post-action hook,
-    * so the HARNESS frees between units of work):
+  /** Frees every frame [[materialize]]/[[materializeDisk]] pinned in
+    * this session. Query code has no post-action hook, so the harness
+    * calls this between units of work (Verify after each dump, Bench and
+    * the probes between reps):
     *
-    *  - `clearCache()` drops CacheManager entries — the
-    *    [[materializeDisk]] `persist(DISK_ONLY)` frames whose
-    *    accumulate-until-session-end lifetime a full-catalog sweep would
-    *    otherwise pay (and whose plan-matching cache reuse would hand
-    *    bench reps after the first a silently warm read);
-    *  - unpersisting every `getPersistentRDDs` entry drops the
-    *    [[materialize]] localCheckpoint BLOCKS immediately instead of
-    *    waiting on ContextCleaner GC — between-rep isolation for A/B
-    *    harnesses (checkpoint RDDs register there; CacheManager never
-    *    sees them).
+    *  - every `getPersistentRDDs` entry is unpersisted: the checkpoint
+    *    blocks of [[materialize]] (which the CacheManager never sees) and
+    *    the cached RDDs of [[materializeDisk]];
+    *  - `clearCache()` then drops the CacheManager plan entries, so no
+    *    later execution plan-matches a frame of an earlier one.
     *
-    * Called by Verify after each query dump, Bench between reps, and
-    * F18Ab between arms/reps. Default non-blocking: async drops suffice
-    * when correctness is the concern, because re-execution never reads
-    * another invocation's checkpoint (only CacheManager entries
-    * plan-match across invocations). Pass `blocking = true` where the
-    * next measurement must start with the blocks actually GONE (A/B
-    * arms whose heap pressure is the measured quantity — the r11
-    * heapchk-arm bias). MaterializeLifecycleSpec pins the contract.
-    *
-    * ORDER MATTERS: the blocking unpersist sweep must run BEFORE
-    * `clearCache()`. Spark's `clearCache()` is always fire-and-forget
-    * (it passes blocking=false down to the cached columnar RDD) and it
-    * synchronously DEREGISTERS that RDD from `getPersistentRDDs` — so
-    * a clearCache-first release would leave the persist(DISK_ONLY)
-    * block removal async even under blocking=true, bleeding removals
-    * into the next timed rep (the exact bias the blocking flag
-    * exists to prevent). Sweeping the registry first unpersists the
-    * cached RDD with the honest flag; clearCache() then only drops the
-    * CacheManager plan entries (its second unpersist of the same RDD
-    * is a no-op). */
+    * Non-blocking by default: re-execution never reads another
+    * invocation's checkpoint, so async drops keep results correct.
+    * `blocking = true` returns only after the blocks are gone; a timed
+    * rep that follows must not share its workers with the removals.
+    * The sweep runs before `clearCache()` because `clearCache()` always
+    * unpersists asynchronously and deregisters the RDD, which would make
+    * a blocking release async. MaterializeLifecycleSpec pins the
+    * contract. */
   def releaseMaterialized(spark: SparkSession, blocking: Boolean = false): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
     spark.catalog.clearCache()

@@ -132,12 +132,7 @@ object ScaleData {
         require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(",")}")
         ts
       } else allTables
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Graft.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.envSession()
     replicate(spark, src, out, factor, jitter, tables)
     spark.stop()
   }

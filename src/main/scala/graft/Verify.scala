@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,12 +9,7 @@ object Verify {
     // comma-separated query names to dump, instead of the full catalog.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.envSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -25,9 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally
-        // Bound materializeDisk's session lifetime: without this a full
-        // 246-query sweep accumulates every persist(DISK_ONLY) frame
-        // until session end (r11 verdict "What's wrong" #2).
+        // No query's materialized frames outlive its dump.
         Graft.releaseMaterialized(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -48,7 +40,7 @@ object Verify {
     // Run-env fingerprint (sha/cpus/heap/GC/loadavg) alongside the dump:
     // scripts/oracle_check.py embeds it in its correctness artifact so
     // every rung JSON is self-describing (r10 verdict item 1).
-    Files.writeString(Paths.get(s"$outDir/run_env.json"), RunEnv.json(cpus, 1))
+    Files.writeString(Paths.get(s"$outDir/run_env.json"), RunEnv.json(Graft.cpus, 1))
     spark.stop()
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions registration for the engine's native
   * expressions — makes them first-class SQL functions
   * (`SELECT cosine_sim(a, b)`) in any session built with
-  * `.withExtensions(new GraftExtensions)` (Graft.configure does this),
+  * `.withExtensions(new GraftExtensions)` (Graft.envSession does this),
   * or via `spark.sql.extensions=graft.functions.GraftExtensions` on a
   * cluster. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -223,26 +223,16 @@ object CohortQueries {
     * broadcast back onto the ~|brands|² pair aggregate. Counts stay
     * integers; each ratio is one IEEE chain on exact counts; the top-20
     * selection orders by the quantized lift with a total (a,b)
-    * tiebreak, so both engines cut the same boundary. */
-  val f18AssocRules: Q = f18AssocRulesWith(Graft.materializeDisk)
-
-  /** f18 with the basket-frame materialization strategy injected — the
-    * ~40 M-row distinct (order, brand) frame feeds FOUR consumers (the
-    * n count, the brand marginals, both sides of the pair self-join),
-    * so it is materialized once; HOW is a measured trade.
-    * [[graft.scale.F18Ab]] A/B'd four arms on the sf10 replica (r10
-    * verdict: the frame's 17 s wall had a bounded-but-wide
-    * GC-sensitive band, the same smell t21 had). Result
-    * (bench/bench_sf10_f18_ab_r11.json, 5 reps, one run): heap
-    * checkpoint 32.9 s median with a 93 s full-GC spike, row-blob
-    * disk checkpoint 48.1 s, columnar `persist(DISK_ONLY)` 15.6 s
-    * flat, recompute 18.3 s — unlike t21's exploded word frame
-    * (recompute won: cheap codegen'd scan+explode), this frame costs
-    * a join + wide distinct to rebuild, so materializing stays right
-    * but the 40 M deserialized heap rows were the GC fuel →
-    * [[Graft.materializeDisk]]. */
-  private[graft] def f18AssocRulesWith(mat: DataFrame => DataFrame): Q = (s, dir) => {
-    val items = mat(
+    * tiebreak, so both engines cut the same boundary.
+    *
+    * The distinct (order, brand) frame feeds four consumers (the order
+    * count, the brand marginals, both sides of the pair self-join) and
+    * costs a join plus a wide distinct to rebuild, so it is built once,
+    * through [[Graft.materializeDisk]]: at the sf10 replica it is ~40 M
+    * rows, which as heap checkpoint blocks drive full GCs
+    * (`bench/bench_sf10_f18_ab_r11.json`). */
+  val f18AssocRules: Q = (s, dir) => {
+    val items = Graft.materializeDisk(
       Graft.table(s, dir, "lineitem").select("l_orderkey", "l_partkey")
         .join(broadcast(Graft.table(s, dir, "part").select("p_partkey", "p_brand")),
           col("l_partkey") === col("p_partkey"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * variants, warm-up-null SMA, percentile risk classes).
   *
   * Oracle ordering note: Spark reads the parquet ns timestamps as ns-longs
-  * (nanosAsLong, see Graft.configure) while DuckDB keeps ns timestamps —
+  * (nanosAsLong, see Graft.envSession) while DuckDB keeps ns timestamps —
   * both order identically; (ts, event_id) adds a unique tiebreak anyway.
   */
 object TsQueries {

@@ -34,7 +34,7 @@ object AdaptivePlanesGen {
     val out = if (args.length > 0) args(0) else "data/adaptive_planes"
     val count = if (args.length > 1) args(1).toInt else 6400
     val dim = if (args.length > 2) args(2).toInt else 64
-    val spark = Graft.localSession(4)
+    val spark = Graft.envSession()
     import spark.implicits._
     VectorOps.gaussianPlanes(42L, count, dim).zipWithIndex
       .map { case (pe, pid) => (pid.toLong, pe.toSeq) }.toSeq

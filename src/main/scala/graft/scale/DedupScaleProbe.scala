@@ -1,8 +1,6 @@
 package graft.scale
 
 import graft.{Graft, RunEnv, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** No-oracle scale probe for the dedup/ANN family above sf10 (r12
@@ -19,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - algebraic postconditions computed in-Spark here (exact-dedup
   *    group sums tie to independent aggregates; every near-dup pair's
   *    endpoints must land in one connected component);
-  *  - execution-shape gates from a task listener: no straggler task
+  *  - execution-shape gates from [[StageStats]]: no straggler task
   *    > 4× its stage median (stages with ≥ 8 tasks and median ≥ 0.5 s),
   *    zero failed tasks; spill bytes reported.
   *
@@ -38,7 +36,7 @@ import org.apache.spark.sql.functions._
   *          [shufflePartitions=SPARK_GRAFT_CPUS]
   *
   * `shufflePartitions` exists because a probe factor is 100-1000× the
-  * bench scale on a 32-thread box: at the default (= cpu count) a
+  * bench scale: at the default (= cpu count) a
   * candidate-heavy distinct puts ~70 M rows in ONE task's hash map,
   * which falls back to sort-based aggregation and spills the raw
   * stream (d5a at F=100: 68.4 GB spilled, then disk exhaustion —
@@ -57,38 +55,6 @@ object DedupScaleProbe {
     "v5_centroid_update", "v6_quantize", "v7_kmeans2", "v8_pq_codes",
     "v9_pq_search", "v10_recall_eval", "v11_cluster_purity")
 
-  /** Per-stage task stats between clear() calls — the probe runs
-    * queries sequentially, so a window of listener events is one
-    * query's execution (plus a drain sleep for late events). */
-  private final class TaskStats extends SparkListener {
-    case class T(stage: Int, sec: Double, spill: Long, failed: Boolean)
-    private val buf = scala.collection.mutable.ArrayBuffer[T]()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      val m = e.taskMetrics
-      val spill = if (m == null) 0L else m.memoryBytesSpilled + m.diskBytesSpilled
-      val sec = if (m == null) 0.0 else m.executorRunTime / 1e3
-      buf += T(e.stageId, sec, spill, !e.taskInfo.successful)
-    }
-    def clear(): Unit = synchronized { buf.clear() }
-    /** (worst max/median ratio over qualifying stages, its stageId,
-      *  total spill bytes, failed task count, task count) */
-    def snapshot(): (Double, Int, Long, Long, Int) = synchronized {
-      val byStage = buf.groupBy(_.stage)
-      var worst = 0.0; var worstStage = -1
-      byStage.foreach { case (sid, ts) =>
-        if (ts.size >= 8) {
-          val d = ts.map(_.sec).sorted
-          val med = d(d.size / 2)
-          if (med >= 0.5) {
-            val r = d.last / med
-            if (r > worst) { worst = r; worstStage = sid }
-          }
-        }
-      }
-      (worst, worstStage, buf.map(_.spill).sum, buf.count(_.failed).toLong, buf.size)
-    }
-  }
-
   private def jq(s: String): String = "\"" + s + "\""
 
   def main(args: Array[String]): Unit = {
@@ -101,15 +67,10 @@ object DedupScaleProbe {
     }
     val reps = if (args.length > 3) args(3).toInt else 3
     val outFile = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions = if (args.length > 5) args(5).toInt else cpus.toInt
-    val spark = Graft.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
+    val shufflePartitions = if (args.length > 5) args(5).toInt else Graft.cpus.toInt
+    val spark = Graft.envSession(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString)
+    val stats = StageStats.attach(spark.sparkContext)
 
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"not in the catalog: ${unknown.mkString(",")}")
@@ -139,18 +100,15 @@ object DedupScaleProbe {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           walls += (System.nanoTime() - t0) / 1e9
-          // Cold reps (Bench convention) — blocking for the same reason
-          // Bench's release is (8e8d286): a fire-and-forget sweep runs
-          // its block removals on the worker threads DURING the next
-          // timed rep, and these walls feed both the published timings
-          // and the straggler listener (the r12 d1b@F100 in-chain 4.49×
-          // that cleared on a solo re-run is the predicted symptom).
+          // Cold reps, as in Bench: blocking, so no block removal runs
+          // on the workers during the next timed rep (these walls feed
+          // both the timings and the straggler gate).
           Graft.releaseMaterialized(spark, blocking = true)
           // The straggler gate targets DATA skew, not JIT: rep 1 of a
           // query carries its codegen/classload warmup, which lands on
           // whichever task runs a fragment first and reads as a fake
           // 5-7x "straggler". Stats cover the warm reps + count pass.
-          if (rep == 1 && reps > 1) { Thread.sleep(300); stats.clear() }
+          if (rep == 1 && reps > 1) stats.clear()
         }
         // Deterministic row count for the law/ratio gates (untimed;
         // single-pass mode already counted).
@@ -158,8 +116,12 @@ object DedupScaleProbe {
       } catch { case e: Throwable =>
         error = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       } finally Graft.releaseMaterialized(spark, blocking = true)
-      Thread.sleep(500) // drain late listener events into THIS window
-      val (strag, stragStage, spill, nFailed, nTasks) = stats.snapshot()
+      val stages = stats.stages
+      val (strag, stragStage) = stages.filter(s => s.tasks >= 8 && s.medianS >= 0.5)
+        .map(s => (s.ratio, s.id)).maxByOption(_._1).getOrElse((0.0, -1))
+      val spill = stages.map(_.spillBytes).sum
+      val nFailed = stages.map(_.failedTasks.toLong).sum
+      val nTasks = stages.map(_.tasks).sum
       System.err.println(f"[probe] $name%-24s rows=$rows%-12d " +
         f"walls=${walls.map(w => f"$w%.1f").mkString("/")} " +
         f"straggler=$strag%.2f spillMB=${spill / 1e6}%.0f failed=$nFailed" +
@@ -254,7 +216,7 @@ object DedupScaleProbe {
     val json = s"""{"metric":"dedup_scale_probe","sf_dir":${jq(sfDir)},""" +
       s""""factor":$factor,"reps":$reps,"shuffle_partitions":$shufflePartitions,""" +
       s""""queries":{$qjson},""" +
-      s""""postconditions":{$pjson},"env":${RunEnv.json(cpus, reps)}}"""
+      s""""postconditions":{$pjson},"env":${RunEnv.json(Graft.cpus, reps)}}"""
     println(json)
     outFile.foreach { f =>
       val p = java.nio.file.Paths.get(f)

@@ -1,15 +1,17 @@
 package graft.scale
 
-// Rep-variance diagnostic: run ONE catalog query `reps` times in one JVM
-// (bench convention: blocking release between reps) and, for every rep,
-// print the wall plus the top per-stage task-time aggregates attributed
-// to that rep — enough to see WHICH stage a slow rep spends its extra
-// time in (same-plan GC/scheduling noise vs a different/worse plan).
-// Found for r13: d10_edit_neighbors reps swing 5 s → 45 s inside one
-// idle-host JVM; the per-rep stage attribution is how the cause was
-// localized rather than guessed.
-import graft.{Graft, SparkEntry}
-import org.apache.spark.scheduler._
+// Rep-variance diagnostic: runs ONE catalog query `reps` times in one
+// JVM (the bench convention: a blocking release between reps) and prints
+// per rep the wall, Janino compiles, JIT ms and the top stages of that
+// rep by task time (tasks, attempts, run/GC/CPU sums, median and max
+// task, max/median ratio, scope), so a slow rep names the stage it
+// spends its time in. The final executed plan and its operator metrics
+// go to /tmp/repplan_<query>_<rep>.txt and /tmp/repmetrics_<...>.txt;
+// a failed dump is reported on stderr and the probe exits 1.
+//
+// Usage: runMain graft.scale.RepProbe <sfDir> <query> [reps=5] [preamble-csv]
+import graft.{Graft, RunEnv, SparkEntry}
+import scala.util.control.NonFatal
 
 object RepProbe {
   def main(args: Array[String]): Unit = {
@@ -21,42 +23,8 @@ object RepProbe {
     // d11 bistability only appears when other d-family queries ran first.
     val preamble: Seq[String] =
       if (args.length > 3) args(3).split(",").toSeq else Seq.empty
-    // cpus + SPARK_GRAFT_CONF A/B overlay resolve in Graft.envSession,
-    // shared with Bench/PlanDump so probe config matches bench config.
     val spark = Graft.envSession()
-    case class St(var n: Int = 0, var run: Double = 0, var gc: Double = 0,
-      var cpu: Double = 0, var maxRun: Double = 0, var ends: String = "")
-    val stages = scala.collection.mutable.Map[Int, St]()
-    val names = scala.collection.mutable.Map[Int, String]()
-    val jobEnds = scala.collection.mutable.ArrayBuffer[String]()
-    val stageAttempts = scala.collection.mutable.Map[Int, Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-        val m = e.taskMetrics
-        if (m != null) {
-          val s = stages.getOrElseUpdate(e.stageId, St())
-          s.n += 1; s.run += m.executorRunTime / 1e3; s.gc += m.jvmGCTime / 1e3
-          s.cpu += m.executorCpuTime / 1e9
-          s.maxRun = s.maxRun.max(m.executorRunTime / 1e3)
-          val r = e.reason.toString.take(20)
-          if (r != "Success") s.ends += s" $r"
-        }
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-        names(e.stageInfo.stageId) =
-          e.stageInfo.rddInfos.flatMap(_.scope.map(_.name)).distinct.mkString("|")
-        stageAttempts(e.stageInfo.stageId) =
-          stageAttempts.getOrElse(e.stageInfo.stageId, 0) + 1
-        e.stageInfo.failureReason.foreach(r =>
-          jobEnds += s"STAGEFAIL ${e.stageInfo.stageId}: ${r.take(120)}")
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        e.jobResult match {
-          case org.apache.spark.scheduler.JobSucceeded => ()
-          case r => jobEnds += s"JOBEND ${e.jobId}: ${r.toString.take(160)}"
-        }
-      }
-    })
+    val stats = StageStats.attach(spark.sparkContext)
     // executed-plan capture (final AQE plan): written per rep so slow and
     // fast reps of the same query can be diffed for plan flips.
     val lastPlan = new java.util.concurrent.atomic.AtomicReference[String]("")
@@ -119,33 +87,36 @@ object RepProbe {
       if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else -1
     }
     var prevJit = jitMs
+    var dumpFailed = false
     (1 to reps).foreach { i =>
-      stages.clear(); names.clear(); jobEnds.clear(); stageAttempts.clear()
+      stats.clear()
       val t0 = System.nanoTime()
       q(spark, sfDir).write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
       Graft.releaseMaterialized(spark, blocking = true)
-      Thread.sleep(300)
       val cgNow = cgCount
       val jitNow = jitMs
-      val top = stages.toSeq.sortBy(-_._2.run).take(8)
-      println(f"REP $i wall=$wall%7.2f s  sumRun=${stages.values.map(_.run).sum}%8.1f sumGc=${stages.values.map(_.gc).sum}%7.1f sumCpu=${stages.values.map(_.cpu).sum}%8.1f cgCompiles=${cgNow - prevCg} jitMs=${jitNow - prevJit}")
-      println(s"    jit=${graft.RunEnv.jitJson}")
+      val stages = stats.stages
+      println(f"REP $i wall=$wall%7.2f s  sumRun=${stages.map(_.runS).sum}%8.1f sumGc=${stages.map(_.gcS).sum}%7.1f sumCpu=${stages.map(_.cpuS).sum}%8.1f cgCompiles=${cgNow - prevCg} jitMs=${jitNow - prevJit}")
+      println(s"    jit=${RunEnv.jitJson}")
       prevCg = cgNow
       prevJit = jitNow
-      top.foreach { case (sid, s) =>
-        val att = stageAttempts.getOrElse(sid, 0)
-        println(f"    stage=$sid%-5d n=${s.n}%-4d att=$att run=${s.run}%8.1f gc=${s.gc}%6.1f cpu=${s.cpu}%8.1f maxTask=${s.maxRun}%7.1f${s.ends}  ${names.getOrElse(sid, "?").take(120)}")
+      stages.sortBy(-_.runS).take(8).foreach { s =>
+        println(f"    stage=${s.id}%-5d n=${s.tasks}%-4d att=${s.attempts} run=${s.runS}%8.1f gc=${s.gcS}%6.1f cpu=${s.cpuS}%8.1f med=${s.medianS}%7.2f maxTask=${s.maxS}%7.1f ratio=${s.ratio}%6.2f failed=${s.failedTasks}  ${s.scope.take(120)}")
       }
-      jobEnds.foreach(j => println(s"    $j"))
+      stats.failures.foreach(j => println(s"    $j"))
       try {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(f"/tmp/repplan_$name%s_$i%02d.txt"), lastPlan.get())
         if (lastQe.get() != null) java.nio.file.Files.writeString(
           java.nio.file.Paths.get(f"/tmp/repmetrics_$name%s_$i%02d.txt"),
           metricLines(lastQe.get()).mkString("\n"))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(e) =>
+        dumpFailed = true
+        System.err.println(s"[repprobe] rep $i dump failed: ${RunEnv.errorJson(e)}")
+      }
     }
     spark.stop()
+    if (dumpFailed) sys.exit(1)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Skew-mitigation utilities for hot grouping keys at cluster scale.
   *
   * AQE's skew-join splitting handles join-side skew automatically
-  * (enabled in Graft.configure); salted aggregation is the manual
+  * (enabled in Graft.envSession); salted aggregation is the manual
   * equivalent for groupBy on pathological key distributions: phase 1
   * aggregates on (key, salt) so a hot key spreads over `salts`
   * reducers, phase 2 merges the partials — algebraic aggregates only.

@@ -1,7 +1,6 @@
 package graft.scale
 
 import graft.Graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -59,12 +58,7 @@ object StreamLate {
     val nFiles = if (args.length > 1) args(1).toInt else 256
     val delayS = if (args.length > 2) args(2).toLong else 60L
     val displaceS = if (args.length > 3) args(3).toLong else 14400L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = Graft.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.envSession()
 
     val replayDir = "target/tmp/late_replay"
     val base = s"target/tmp/late_${System.nanoTime()}"

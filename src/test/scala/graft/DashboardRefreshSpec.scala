@@ -1,7 +1,7 @@
 package graft
 
 import graft.analytics.CompareAssets
-import org.apache.spark.ListenerBusProbe
+import org.apache.spark.GraftCoreBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -30,7 +30,7 @@ class DashboardRefreshSpec extends SparkSpec {
     sc.setJobGroup(group, group)
     try {
       val out = f
-      ListenerBusProbe.drain(sc)
+      GraftCoreBridge.drainListenerBus(sc)
       (out, listener.synchronized(n))
     } finally {
       sc.clearJobGroup()

@@ -1,7 +1,7 @@
 package graft
 
 /** The native expressions are registered as SQL functions through
-  * SparkSessionExtensions (Graft.configure). */
+  * SparkSessionExtensions (Graft.envSession). */
 class ExtensionsSpec extends SparkSpec {
 
   test("cosine_sim / dot_product / run_lengths callable from SQL") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * materialization has no post-action hook, so the HARNESS bounds the
   * lifetime — [[Graft.releaseMaterialized]] must drop BOTH kinds of
   * retained state, and the harness entry points (Verify per query,
-  * Bench per rep, F18Ab per arm-rep) all call it. Without this a
+  * Bench and the probes per rep) all call it. Without this a
   * full-catalog sweep accumulates every persist(DISK_ONLY) frame until
   * session end, and bench reps after the first read a silently warm
   * columnar cache (the f18 8.2 s-vs-15.6 s artifact gap). */

@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session across all suites (they run in one forked JVM). */
+/** One shared local session across all suites (they run in one forked
+  * JVM), built like every other session but pinned at 4 cores, so tests
+  * run the same on any host. */
 object SparkTest {
-  lazy val spark: SparkSession = Graft.localSession(4)
+  lazy val spark: SparkSession = Graft.envSession(
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
