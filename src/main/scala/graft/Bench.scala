@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** Benchmark main. Runs every `SparkEntry.queries` entry `SPARK_GRAFT_REPS`
@@ -9,7 +9,9 @@ import scala.util.control.NonFatal
   * host are unadjudicable — co-tenant load spikes wall-times 2-4x — so the
   * median across reps is the only number the JSON line headlines.
   * `/proc/loadavg` is sampled before and after the run and emitted so a
-  * noisy-host run is visible in the artifact itself.
+  * noisy-host run is visible in the artifact itself. The artifact's
+  * `errors` holds the warm-up's and each failed query's first failure;
+  * `env.errors` holds the failed environment probes ([[RunEnv.errors]]).
   */
 object Bench {
   /** Untimed warm-up: JIT/codegen/first-read costs land here, not on
@@ -38,13 +40,44 @@ object Bench {
       Seq.empty
     } catch { case NonFatal(e) => Seq(RunEnv.errorJson(e)) }
 
+  /** Times `reps` runs of one query into the noop sink, which
+    * materializes every column of every row (count() would let Catalyst
+    * prune the plan down to a row count). A failed rep yields no time;
+    * the query's first failure is returned as an error entry. */
+  def timeReps(spark: SparkSession, name: String, reps: Int)(
+      query: => DataFrame): (Seq[Double], Option[String]) = {
+    var error: Option[String] = None
+    val ts = (1 to reps).flatMap { _ =>
+      val t0 = System.nanoTime()
+      try {
+        query.write.mode("overwrite").format("noop").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case NonFatal(e) =>
+        if (error.isEmpty) {
+          error = Some(RunEnv.errorJson(e, name))
+          System.err.println(s"[bench] $name: ${e.getMessage}")
+        }
+        None
+      } finally {
+        // Cache honesty (untimed): every rep starts with no
+        // materialized frame of an earlier rep, so each rep pays the
+        // cold cost a fresh session pays. Blocking, so no block removal
+        // runs on the workers during the next timed rep. Medians of the
+        // materialize-backed queries before bench_sf01_r12.json are
+        // warm and do not compare (SCALE_r12.md).
+        Graft.releaseMaterialized(spark, blocking = true)
+      }
+    }
+    (ts, error)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val spark = Graft.envSession()
     val loadBefore = RunEnv.loadavg
     val stealBefore = RunEnv.stealTicks
-    val errors = warmup(spark, sfDir)
+    val errors = scala.collection.mutable.ListBuffer[String](warmup(spark, sfDir): _*)
     val failed = scala.collection.mutable.ListBuffer[String]()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -63,29 +96,8 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val st0 = RunEnv.stealTicks
-      val ts = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        // noop sink: materializes every column of every row (count() would
-        // let Catalyst prune the plan down to a row count).
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          if (!failed.contains(name)) {
-            failed += name
-            System.err.println(s"[bench] $name: ${e.getMessage}")
-          }
-          None
-        } finally {
-          // Cache honesty (untimed): every rep starts with no
-          // materialized frame of an earlier rep, so each rep pays the
-          // cold cost a fresh session pays. Blocking, so no block removal
-          // runs on the workers during the next timed rep. Medians of the
-          // materialize-backed queries before bench_sf01_r12.json are
-          // warm and do not compare (SCALE_r12.md).
-          Graft.releaseMaterialized(spark, blocking = true)
-        }
-      }
+      val (ts, error) = timeReps(spark, name, reps)(fn(spark, sfDir))
+      error.foreach { e => failed += name; errors += e }
       val st1 = RunEnv.stealTicks
       if (st0 >= 0 && st1 > st0 && (st1 - st0) / 100.0 > 0.5)
         stealByQuery(name) = (st1 - st0) / 100.0
@@ -114,7 +126,7 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
       if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] json write failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] json write failed: $e") }
     spark.stop()
   }
 }

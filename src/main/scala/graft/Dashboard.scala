@@ -1,10 +1,14 @@
 package graft
 
+import graft.align.Alignment
 import graft.analytics.{CompareAssets, Similarity, Volatility}
 import graft.io.{ApiJson, BarsIO, PdfReport}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ta.Technical
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The reference workload end-to-end, offline, as one `runMain`: wide
   * CSV source → vol/risk pipeline → correlation heatmap → pair
@@ -18,12 +22,17 @@ import java.nio.file.{Files, Paths}
   * }}}
   *
   * Writes `symbols.json`, `risk.json`, `heatmap.json`,
-  * `similarity.json`, `report.pdf` into `outDir`. Every result with two
-  * consumers is computed once per run: the symbol list (default pair,
-  * `symbols.json`, PDF subtitle), the log returns (vol/risk and
-  * heatmap), the classification (`risk.json`, PDF table) and the
-  * heatmap (`heatmap.json`, PDF top-10). Payload renders collect only
-  * k-bounded frames (see ApiJson's scaladoc).
+  * `similarity.json`, `report.pdf` into `outDir`.
+  *
+  * A refresh splits its work at the k-bounded tail. Spark computes every
+  * result that scales with rows, over ONE cached frame (the priced bars
+  * with their log return): the vol aggregate and its classification,
+  * the correlation triangle, and the pair similarity, one query each.
+  * Each k-bounded result is collected once, and every payload that
+  * shows it is rendered from those rows on the driver: both JSON
+  * payloads, and the PDF tables as local frames, which Spark projects
+  * and collects without a job. The symbol list is the CSV header's, read
+  * without a job too ([[graft.io.BarsIO.headerSchema]]).
   */
 object Dashboard {
   def main(args: Array[String]): Unit = {
@@ -44,33 +53,34 @@ object Dashboard {
       pair: Option[(String, String)] = None): Seq[String] = {
     val keys = Seq("symbol")
     val order = Seq(col("date"))
-    // Frames with two consumers are cached once. `cached` lists
-    // dependents first, so each is released before the frame it reads.
-    var cached = List.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached ::= df.cache(); df }
+    val wide = BarsIO.readWideCsv(spark, csv)
+    val syms = Alignment.wideSymbols(wide)
+    val (symA, symB) = pair.getOrElse {
+      if (syms.contains("VOO") && syms.contains("SPY")) ("VOO", "SPY")
+      else (syms(0), syms(math.min(1, syms.length - 1)))
+    }
+    // The one cached frame: rows with a close, and their strict log
+    // return (null on a series' first close and after a non-positive one).
+    val priced = Alignment.wideToLong(wide).filter(col("close").isNotNull)
+      .withColumn("ret", Technical.logReturnStrict(col("close"), keys, order))
+      .cache()
     try {
-      val bars = keep(BarsIO.readLong(spark, csv))
-      val priced = bars.filter(col("close").isNotNull)
-      val rets = keep(Volatility.logReturns(priced, col("close"), keys, order))
-
       // /api/risk — annualized vol → tercile classification (A4-A8)
-      val classified = keep(Volatility.classify(
-        Volatility.fromReturns(rets, priced, keys), Seq(col("symbol"))))
+      val risk = Volatility.classify(Volatility.ofReturns(priced, keys), Seq(col("symbol")))
+        .select("symbol", "vol", "risk_class", "rank", "p33", "p66").collect()
+        .map(r => ApiJson.RiskRow(r.getString(0), r.getDouble(1), r.getString(2),
+          r.getInt(3), r.getDouble(4), r.getDouble(5)))
+        .toSeq.sortBy(_.rank)
 
-      // /api/heatmap — Pearson over log returns, all pairs (A9/A10)
-      val heat = keep(Similarity.heatmap(
-        Similarity.withPos(rets.select(col("symbol"), col("date"),
-          col("ret").as("v")), keys, order),
-        "symbol"))
+      // /api/heatmap — Pearson over log returns, each pair once (A9/A10)
+      val cells = Similarity.pairCorrelations(
+        Similarity.withPos(priced.filter(col("ret").isNotNull)
+          .select(col("symbol"), col("date"), col("ret").as("v")), keys, order),
+        "symbol").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
 
       // /api/similarity — the X3 façade (euclidean/pearson/DTW/cosine)
-      val syms = bars.select("symbol").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      val (symA, symB) = pair.getOrElse {
-        if (syms.contains("VOO") && syms.contains("SPY")) ("VOO", "SPY")
-        else (syms(0), syms(math.min(1, syms.length - 1)))
-      }
-      val sim = CompareAssets.compare(bars, symA, symB)
+      val sim = CompareAssets.compare(priced, symA, symB)
 
       def write(name: String, text: String): String = {
         Files.write(Paths.get(outDir, name), (text + "\n").getBytes("UTF-8"))
@@ -78,22 +88,31 @@ object Dashboard {
       }
       val jsons = Seq(
         write("symbols.json", ApiJson.symbols(syms)),
-        write("risk.json", ApiJson.risk(classified)),
-        write("heatmap.json", ApiJson.heatmap(heat)),
+        write("risk.json", ApiJson.risk(risk)),
+        write("heatmap.json", ApiJson.heatmap(cells)),
         write("similarity.json", ApiJson.similarity(symA, symB, sim)))
 
-      // the PDF report sink over the same result frames (S9)
-      val volTable = classified.select(col("rank"), col("symbol"),
-        round(col("vol") * 100, 2).as("vol_pct"), col("risk_class"))
-        .orderBy("rank")
-      val topCorr = heat.filter(col("ka") < col("kb"))
+      // the PDF report sink over the same rows (S9)
+      def local(rows: Seq[Row], schema: String): DataFrame =
+        spark.createDataFrame(rows.asJava, StructType.fromDDL(schema))
+      val volTable = local(risk.map(r => Row(r.rank, r.symbol, r.vol, r.riskClass)),
+          "rank INT, symbol STRING, vol DOUBLE, risk_class STRING")
+        .select(col("rank"), col("symbol"), round(col("vol") * 100, 2).as("vol_pct"),
+          col("risk_class"))
+      val pearson = local(cells.collect { case (a, b, c) if a != b => Row(a, b, c) },
+          "ka STRING, kb STRING, corr DOUBLE")
         .select(col("ka"), col("kb"), round(col("corr"), 4).as("pearson"))
-        .orderBy(desc("pearson"), col("ka"), col("kb")).limit(10)
+      // desc(pearson), then ka, then kb, in Spark's binary string order
+      val byCorr = Ordering.Tuple3(Ordering.Double.TotalOrdering.reverse,
+        CompareAssets.binaryStringOrder, CompareAssets.binaryStringOrder)
+      val top = pearson.collect().toSeq
+        .sortBy(r => (r.getDouble(2), r.getString(0), r.getString(1)))(byCorr).take(10)
+      val topCorr = spark.createDataFrame(top.asJava, pearson.schema)
       PdfReport.write(s"$outDir/report.pdf", "Portfolio analytics report",
         s"source: $csv — ${syms.length} symbols",
         Seq(PdfReport.Section("Risk classification (annualized volatility)", volTable),
           PdfReport.Section("Top-10 correlated pairs", topCorr)))
       jsons :+ "report.pdf"
-    } finally cached.foreach(_.unpersist())
+    } finally priced.unpersist()
   }
 }

@@ -44,11 +44,15 @@ object Alignment {
     pivoted.orderBy("date")
   }
 
+  /** The symbols of a wide frame, sorted: one per `*_Close` header, like
+    * the reference discovers them (app.py:80-85). */
+  def wideSymbols(wide: DataFrame): Seq[String] =
+    wide.columns.toSeq.filter(_.endsWith("_Close")).map(_.stripSuffix("_Close")).sorted
+
   /** Inverse of J3 for reading the reference's wide CSV: melt sym_Field
-    * columns back to the long bar schema. Symbols are discovered from
-    * `*_Close` headers like the reference does (app.py:80-85). */
+    * columns of every [[wideSymbols]] symbol back to the long bar schema. */
   def wideToLong(wide: DataFrame): DataFrame = {
-    val symbols = wide.columns.filter(_.endsWith("_Close")).map(_.stripSuffix("_Close")).sorted
+    val symbols = wideSymbols(wide)
     val stacks = symbols.map { s =>
       struct(lit(s).as("symbol"), col(s + "_Open").as("open"), col(s + "_High").as("high"),
         col(s + "_Low").as("low"), col(s + "_Close").as("close"),

@@ -43,7 +43,7 @@ object CompareAssets {
 
   /** Spark's binary string order (UTF-8 bytes), which differs from
     * `String.compareTo` above the surrogate range. */
-  private val binaryStringOrder: Ordering[String] = new Ordering[String] {
+  val binaryStringOrder: Ordering[String] = new Ordering[String] {
     def compare(x: String, y: String): Int =
       UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
   }

@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   * reference's zip of calendar-aligned lists; the inner join on position
   * truncates to the common prefix deterministically.
   *
-  * Scale: the position join shuffles on (position) — for the all-pairs
-  * heatmap the returns table is tiny after per-series reduction isn't
-  * possible, so the join is instead keyed on position with the pair filter
-  * applied post-join; at k series the fan-out is k²/2 pairs × series
-  * length, the same O(k²·n) the reference pays, but distributed. */
+  * Scale: the all-pairs heatmap cannot reduce each series first, so it
+  * joins on position and filters the pairs after the join; at k series
+  * the fan-out is k²/2 pairs × series length, the same O(k²·n) the
+  * reference pays, but distributed. */
 object Similarity {
 
   /** Per-series positional index for alignment. */
@@ -102,22 +101,28 @@ object Similarity {
         .select(col("kb").as("ka"), col("ka").as("kb"), col("corr")))
   }
 
-  /** A10: all-pairs Pearson matrix over series keyed by `k`, with the
-    * reference's symmetry trick (compute kA < kB, mirror, diag = 1.0 —
-    * app.py:322-353). Input must already carry (k, pos, v). */
-  def heatmap(posed: DataFrame, k: String): DataFrame = {
+  /** A10's triangle: one row per pair `ka <= kb` of series keyed by `k`,
+    * with the Pearson correlation of their aligned values (0.0 on zero
+    * variance, app.py:322-353) and 1.0 on the diagonal. One join and one
+    * aggregate: k(k+1)/2 rows, one for each pair of keys with at least one
+    * value (null keys have none). Input must already carry (k, pos, v). */
+  def pairCorrelations(posed: DataFrame, k: String): DataFrame = {
     val a = posed.select(col(k).as("ka"), col("pos"), col("v").as("va"))
     val b = posed.select(col(k).as("kb"), col("pos"), col("v").as("vb"))
-    val upper = a.join(b, "pos").filter(col("ka") < col("kb"))
+    a.join(b, "pos").filter(col("ka") <= col("kb"))
       .groupBy("ka", "kb")
-      .agg(coalesce(corr(col("va"), col("vb")), lit(0.0)).as("corr"))
-      // k(k-1)/2 rows feed both the direct and the mirrored branch —
-      // materialize once instead of recomputing the join+agg lineage
-      // (see Graft.materialize for the trade).
-      .transform(graft.Graft.materialize)
-    val mirror = upper.select(col("kb").as("ka"), col("ka").as("kb"), col("corr"))
-    val diag = posed.select(col(k).as("ka")).distinct()
-      .select(col("ka"), col("ka").as("kb"), lit(1.0).as("corr"))
-    upper.unionByName(mirror).unionByName(diag)
+      .agg(when(col("ka") === col("kb"), lit(1.0))
+        .otherwise(coalesce(corr(col("va"), col("vb")), lit(0.0))).as("corr"))
+  }
+
+  /** A10: the full k×k matrix in long form (ka, kb, corr): the
+    * [[pairCorrelations]] triangle plus its mirror, the reference's
+    * symmetry trick. */
+  def heatmap(posed: DataFrame, k: String): DataFrame = {
+    // the triangle feeds both branches — materialize it once instead of
+    // recomputing the join+agg lineage (see Graft.materialize).
+    val upper = pairCorrelations(posed, k).transform(graft.Graft.materialize)
+    upper.unionByName(upper.filter(col("ka") < col("kb"))
+      .select(col("kb").as("ka"), col("ka").as("kb"), col("corr")))
   }
 }

@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions._
 /** Historical volatility + percentile risk classification (reference
   * algorithms/volatility.py — SURVEY.md §2.4 A4-A8).
   *
-  * Scale shape: one shuffle for the per-series groupBy; the series count
-  * (symbols/users) is orders of magnitude smaller than the row count, so
-  * everything after the first aggregate is near-free. The global
-  * percentile and rank run over #series rows only — the single-partition
-  * window is fine because its input is already reduced (documented
-  * deliberately: never run a global window over raw rows).
+  * Scale shape: the per-series log return is a window partitioned by
+  * key, and the vol is one `groupBy(keys)` over its output, which that
+  * window's partitioning already satisfies. Everything after it runs over
+  * one row per series (symbols/users, orders of magnitude fewer than the
+  * rows): the percentiles and the rank are ONE single-partition window
+  * pass. That window is fine because its input is already reduced
+  * (never run a global window over raw rows), but it is not free: each
+  * stage costs 50–150 ms of scheduling at any input size, so the
+  * classification adds one stage, not one per statistic.
   */
 object Volatility {
 
@@ -23,28 +26,16 @@ object Volatility {
     * × √252 per series; 0.0 when fewer than 2 returns. */
   def annualized(df: DataFrame, price: Column, keys: Seq[String],
       order: Seq[Column]): DataFrame =
-    fromReturns(logReturns(df, price, keys, order), df, keys)
+    ofReturns(df.withColumn("ret", Technical.logReturnStrict(price, keys, order)), keys)
 
-  /** `df` plus the strict log return `ret` (volatility.py:30-56), rows
-    * without a valid return dropped. */
-  def logReturns(df: DataFrame, price: Column, keys: Seq[String],
-      order: Seq[Column]): DataFrame =
-    df.withColumn("ret", Technical.logReturnStrict(price, keys, order))
-      .filter(col("ret").isNotNull)
-
-  /** [[annualized]] from [[logReturns]]' output; `series` holds every
-    * key that gets a vol. */
-  def fromReturns(rets: DataFrame, series: DataFrame, keys: Seq[String]): DataFrame = {
-    val vols = rets
-      .groupBy(keys.map(col): _*)
-      .agg((stddev_samp(col("ret")) * sqrt(lit(TradingDays.toDouble))).as("vol0"))
-    // Series with <2 valid returns must yield 0.0, not disappear
-    // (volatility.py:102-103) — re-join against the full key set.
-    series.select(keys.map(col): _*).distinct()
-      .join(vols, keys, "left")
-      .withColumn("vol", coalesce(col("vol0"), lit(0.0)))
-      .drop("vol0")
-  }
+  /** [[annualized]] over a frame that already carries the strict log
+    * return `ret` (volatility.py:30-56), null where a row has none. Every
+    * key of `rets` gets one row: `stddev_samp` skips the null returns,
+    * and a series with fewer than 2 returns gets 0.0
+    * (volatility.py:102-103). */
+  def ofReturns(rets: DataFrame, keys: Seq[String]): DataFrame =
+    rets.groupBy(keys.map(col): _*)
+      .agg(coalesce(stddev_samp(col("ret")) * sqrt(lit(TradingDays.toDouble)), lit(0.0)).as("vol"))
 
   /** A5 (volatility.py:193-200): exact linear-interpolation percentiles —
     * matches Spark's `percentile`, NOT percentile_approx (SURVEY.md §7.4.5). */
@@ -55,17 +46,20 @@ object Volatility {
 
   /** A6+A8 (volatility.py:128-223): label each series Conservador (vol ≤
     * p33) / Moderado (≤ p66) / Agresivo, rank 1..k ascending by vol.
-    * `tiebreak` keeps the rank deterministic on equal vols. */
+    * `tiebreak` keeps the rank deterministic on equal vols. The
+    * [[thresholds]] are computed over the whole frame in the same window
+    * as the rank, so every row carries them. */
   def classify(vols: DataFrame, tiebreak: Seq[Column]): DataFrame = {
-    val th = thresholds(vols)
-    val ranked = vols.crossJoin(broadcast(th))
+    val byVol = Window.orderBy(col("vol").asc +: tiebreak: _*)
+    val all = byVol.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    vols
+      .withColumn("p33", expr("percentile(vol, 0.33)").over(all))
+      .withColumn("p66", expr("percentile(vol, 0.66)").over(all))
       .withColumn("risk_class",
         when(col("vol") <= col("p33"), "Conservador")
           .when(col("vol") <= col("p66"), "Moderado")
           .otherwise("Agresivo"))
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("vol").asc +: tiebreak: _*)))
-    ranked
+      .withColumn("rank", row_number().over(byVol))
   }
 
   /** A7 (volatility.py:282-286): count per risk class. */

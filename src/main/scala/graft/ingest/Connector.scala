@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Chart ingest connector (SURVEY.md §2.1 S1/S2/S4) — the reference's
   * front door, re-expressed behind an interface so the engine never
@@ -76,7 +77,8 @@ object Connector {
   /** S4: fetch every symbol (each with S2 retry), skip failures, and
     * enforce the ≥`minSuccess` gate. Empty payloads count as failures
     * (the reference's `if data:` non-empty check,
-    * data_fetcher.py:309-311). Returns the (symbol, json) frame ready
+    * data_fetcher.py:309-311). A fatal error or an interrupt is not a
+    * failed symbol: it stops the batch. Returns the (symbol, json) frame ready
     * for [[ChartJson.parse]] / [[graft.etl.EtlJob.run]]. */
   def fetchAll(spark: SparkSession, source: ChartSource,
       symbols: Seq[String], period1: Long, period2: Long,
@@ -90,7 +92,7 @@ object Connector {
         if (json != null && json.trim.nonEmpty) Right(sym -> json)
         else Left(sym -> "empty payload")
       } catch {
-        case e: Throwable => Left(sym -> String.valueOf(e.getMessage))
+        case NonFatal(e) => Left(sym -> String.valueOf(e.getMessage))
       }
     }
     val ok = attempts.collect { case Right(p) => p }

@@ -57,40 +57,52 @@ object ApiJson {
     s"""{"symbols": [${syms.map(jstr).mkString(", ")}]}"""
 
   /** `/api/heatmap` (app.py:322-353): dense correlation matrix from the
-    * engine's long-form heatmap frame (ka, kb, corr — diag included).
-    * Cells round to 4 dp like the endpoint; symbol order is sorted
-    * (the engine's deterministic stand-in for the reference's dataset
-    * column order). */
-  def heatmap(corrLong: DataFrame): String = {
-    val cells = corrLong.select("ka", "kb", "corr").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> round(r.getDouble(2), 4))
-      .toMap
-    val syms = cells.keys.map(_._1).toSeq.distinct.sorted
+    * engine's long-form heatmap frame (ka, kb, corr — diag included). */
+  def heatmap(corrLong: DataFrame): String =
+    heatmap(corrLong.select("ka", "kb", "corr").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq)
+
+  /** `/api/heatmap` from collected (ka, kb, corr) cells holding each pair
+    * of symbols in at least one orientation: the full matrix or its
+    * triangle. Cells round to 4 dp like the endpoint and the diagonal
+    * reads 1.0; symbol order is sorted (the engine's deterministic
+    * stand-in for the reference's dataset column order). */
+  def heatmap(cells: Seq[(String, String, Double)]): String = {
+    val byPair = cells.map { case (a, b, c) => (a, b) -> round(c, 4) }.toMap
+    val syms = cells.flatMap(c => Seq(c._1, c._2)).distinct.sorted
     val matrix = syms.map { a =>
-      syms.map(b => jnum(if (a == b) 1.0 else cells((a, b))))
+      syms.map(b => jnum(if (a == b) 1.0 else byPair.getOrElse((a, b), byPair((b, a)))))
         .mkString("[", ", ", "]")
     }.mkString("[", ", ", "]")
     s"""{"symbols": [${syms.map(jstr).mkString(", ")}], "matrix": $matrix}"""
   }
 
-  /** `/api/risk` (app.py:447-482): classifications (rank order) +
-    * thresholds + class counts. Input is the engine's classify frame
+  /** One series of the risk classification, as [[graft.analytics.Volatility.classify]]
+    * emits it (the thresholds repeat on every row). */
+  final case class RiskRow(symbol: String, vol: Double, riskClass: String, rank: Int,
+      p33: Double, p66: Double)
+
+  /** `/api/risk` (app.py:447-482) from the engine's classify frame
     * (symbol, vol, risk_class, rank, p33, p66 — Volatility.classify's
-    * exact output). Summary keys are the capitalized class labels
+    * exact output). */
+  def risk(classified: DataFrame, keyCol: String = "symbol"): String =
+    risk(classified.select(col(keyCol), col("vol"), col("risk_class"),
+        col("rank"), col("p33"), col("p66")).collect()
+      .map(r => RiskRow(r.getString(0), r.getDouble(1), r.getString(2), r.getInt(3),
+        r.getDouble(4), r.getDouble(5))).toSeq)
+
+  /** `/api/risk`: classifications (rank order) + thresholds + class
+    * counts. Summary keys are the capitalized class labels
     * (volatility.py:282, which the endpoint passes through verbatim). */
-  def risk(classified: DataFrame, keyCol: String = "symbol"): String = {
-    val rows = classified
-      .select(col(keyCol), col("vol"), col("risk_class"),
-        col("rank"), col("p33"), col("p66"))
-      .orderBy("rank").collect()
-    val cls = rows.map { r =>
-      s"""{"symbol": ${jstr(r.getString(0))}, "volatility": ${jnum(round(r.getDouble(1), 6))}, "volatility_pct": ${jnum(round(r.getDouble(1) * 100, 2))}, "risk_class": ${jstr(r.getString(2))}, "rank": ${r.getInt(3)}}"""
+  def risk(rows: Seq[RiskRow]): String = {
+    val ranked = rows.sortBy(_.rank)
+    val cls = ranked.map { r =>
+      s"""{"symbol": ${jstr(r.symbol)}, "volatility": ${jnum(round(r.vol, 6))}, "volatility_pct": ${jnum(round(r.vol * 100, 2))}, "risk_class": ${jstr(r.riskClass)}, "rank": ${r.rank}}"""
     }.mkString("[", ", ", "]")
-    val counts = rows.groupBy(_.getString(2)).view.mapValues(_.length).toMap
+    val counts = ranked.groupBy(_.riskClass).view.mapValues(_.length).toMap
     val summary = Seq("Conservador", "Moderado", "Agresivo")
       .map(k => s"${jstr(k)}: ${counts.getOrElse(k, 0)}").mkString("{", ", ", "}")
-    val (p33, p66) =
-      if (rows.isEmpty) (0.0, 0.0) else (rows.head.getDouble(4), rows.head.getDouble(5))
+    val (p33, p66) = ranked.headOption.fold((0.0, 0.0))(r => (r.p33, r.p66))
     s"""{"classifications": $cls, "thresholds": {"p33": ${jnum(round(p33, 6))}, "p66": ${jnum(round(p66, 6))}}, "summary": $summary}"""
   }
 

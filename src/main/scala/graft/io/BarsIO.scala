@@ -1,8 +1,13 @@
 package graft.io
 
 import graft.align.Alignment
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 
 /** Readers/writers for the reference's master-dataset CSV format
   * (SURVEY.md §2.1 S5/S6): header `Date,{SYM}_{Field}…`, nulls serialized
@@ -10,15 +15,17 @@ import org.apache.spark.sql.functions._
   * engine is parquet in long format; this is the compatibility layer. */
 object BarsIO {
 
+  private val CsvOptions = Map("header" -> "true",
+    "nullValue" -> "None", // the reference's literal null text
+    "emptyValue" -> "")
+
   /** S6: read the wide CSV, mapping "None"/"" to null, all prices double,
     * volumes long; returns the wide frame (Date as string, lexicographic =
-    * chronological per the reference's date convention). */
+    * chronological per the reference's date convention). Building the
+    * frame runs no Spark job when [[headerSchema]] can read the header. */
   def readWideCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("nullValue", "None")   // the reference's literal null text
-      .option("emptyValue", "")
-      .csv(path)
+    val reader = spark.read.options(CsvOptions)
+    val raw = headerSchema(spark, path).fold(reader)(reader.schema).csv(path)
     val typed = raw.columns.map {
       case "Date" => col("Date")
       case c if c.endsWith("_Volume") =>
@@ -29,6 +36,39 @@ object BarsIO {
           .cast("double").as(c)
     }
     raw.select(typed.toIndexedSeq: _*)
+  }
+
+  /** The schema Spark's CSV inference gives `path`, read from the header
+    * line through the Hadoop `FileSystem` instead of by a Spark job.
+    * Inference takes the first non-empty line of the first file split,
+    * and splits are packed largest-first, so that line is the first
+    * non-empty line of the largest file. None, and Spark infers as
+    * usual, whenever that rule is not certain: a glob, a nested or
+    * compressed input, two files tied for largest, a second file large
+    * enough to be split, or a largest file with no header line. */
+  def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    if (path.exists("{}[]*?\\".contains(_)) || !fs.exists(root)) return None
+    val status = fs.getFileStatus(root)
+    val files = if (!status.isDirectory) Seq(status)
+      else fs.listStatus(root).toSeq.filterNot(f => GraftSqlBridge.hiddenFileName(f.getPath.getName))
+    val codecs = new CompressionCodecFactory(conf)
+    if (files.exists(f => f.isDirectory || codecs.getCodec(f.getPath) != null)) return None
+    files.map(_.getLen).filter(_ > 0).sorted.reverse match {
+      case Seq() => None
+      case Seq(a, b, _*) if a == b || b >= GraftSqlBridge.filesOpenCostInBytes(spark) => None
+      case largest +: _ =>
+        val in = new BufferedReader(new InputStreamReader(
+          fs.open(files.find(_.getLen == largest).get.getPath), StandardCharsets.UTF_8))
+        try {
+          // the line reader Spark scans with drops a leading UTF-8 BOM
+          val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+            .zipWithIndex.map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
+          GraftSqlBridge.csvHeaderSchema(spark, lines, CsvOptions)
+        } finally in.close()
+    }
   }
 
   /** S6 + melt: wide CSV → canonical long bar table. */

@@ -1,12 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.HadoopFSUtils
 
-/** Bridge into the `private[sql]` Dataset constructor so graft's custom
-  * logical operators (graft.plans) can be wrapped back into a public
-  * DataFrame. The one-file-in-spark's-namespace shim is the standard
-  * technique for third-party plan extensions; nothing else in the repo
-  * lives outside the graft package. */
+/** Bridge into `private[sql]` internals: the Dataset constructor, so
+  * graft's custom logical operators (graft.plans) can be wrapped back
+  * into a public DataFrame, and the CSV source's header rules, so
+  * `BarsIO` can read a header exactly as inference does without a job.
+  * The one-file-in-spark's-namespace shim is the standard technique for
+  * third-party plan extensions; nothing else in the repo lives outside
+  * the graft package. */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
@@ -15,4 +21,28 @@ object GraftSqlBridge {
     * ColumnNode; the converter lives behind private[sql]). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The all-string schema the CSV source infers (header on, no type
+    * inference) when `lines` are the lines of the file it reads the
+    * header from: the first line that is neither empty nor a comment,
+    * parsed and made safe (empty, null-text and duplicate names renamed)
+    * by Spark's own CSV code. None when no line holds a header. */
+  def csvHeaderSchema(spark: SparkSession, lines: Iterator[String],
+      options: Map[String, String]): Option[StructType] = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val parser = new com.univocity.parsers.csv.CsvParser(parsed.asParserSettings)
+    CSVUtils.filterCommentAndEmpty(lines, parsed).take(1).toSeq.headOption
+      .flatMap(line => Option(parser.parseLine(line)))
+      .map(row => StructType(CSVUtils.makeSafeHeader(row, conf.caseSensitiveAnalysis, parsed)
+        .map(StructField(_, StringType)).toSeq))
+  }
+
+  /** File names a file-source scan skips when it lists a directory. */
+  def hiddenFileName(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `spark.sql.files.openCostInBytes`: no file smaller than this is
+    * split across scan partitions. */
+  def filesOpenCostInBytes(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.filesOpenCostInBytes
 }

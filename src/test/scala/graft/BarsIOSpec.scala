@@ -80,4 +80,42 @@ class BarsIOSpec extends SparkSpec {
     val aaa = rows.find(r => r.getString(0) == "2024-02-09" && r.getString(1) == "AAA").get
     assert(aaa.toSeq == Seq("2024-02-09", "AAA", 58.89, 60.07, 58.29, 59.48, 1390L))
   }
+
+  test("readWideCsv takes Spark's inferred header without running a job") {
+    val dir = Files.createTempDirectory("graftheader")
+    def write(rel: String, text: String): String = {
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, text).toString
+    }
+    val rows = (1 to 5).map(i => s"2024-01-0$i,${100 + i}.5,${200 + i}").mkString("\n")
+    try {
+      // a writer's output directory: one part file beside hidden files
+      write("single/part-00000.csv", s"Date,AAA_Close,AAA_Volume\n$rows\n")
+      write("single/_SUCCESS", "")
+      write("single/.part-00000.csv.crc", "Date,XXX_Close\n")
+      // the larger file holds the header inference reads, not the first by name
+      write("two/a.csv", "Date,AAA_Close\n2024-01-01,1.0\n")
+      write("two/b.csv", s"Date,BBB_Close,BBB_Volume\n$rows\n")
+      val cases = Seq(
+        dir.resolve("single").toString,
+        dir.resolve("two").toString,
+        // duplicate and empty names, made safe the way inference makes them
+        write("plain.csv", s"Date,AAA_Close,AAA_Close,,AAA_Volume\n$rows\n"),
+        write("blank.csv", s"\n   \nDate,CCC_Close,CCC_Volume\n$rows\n"))
+      for (path <- cases) {
+        val inferred = spark.read.option("header", "true").csv(path).columns.toSeq
+        assert(BarsIO.headerSchema(spark, path).map(_.fieldNames.toSeq).contains(inferred), path)
+        val (wide, n, _) = jobs(BarsIO.readWideCsv(spark, path))
+        assert(n == 0, s"$path: building the frame ran $n jobs")
+        assert(wide.columns.toSeq == inferred, path)
+      }
+      assert(spark.read.option("header", "true").csv(cases(1)).columns.toSeq ==
+        Seq("Date", "BBB_Close", "BBB_Volume"))
+      assert(spark.read.option("header", "true").csv(cases(2)).columns.toSeq ==
+        Seq("Date", "AAA_Close1", "AAA_Close2", "_c3", "AAA_Volume"))
+      // a glob is left to Spark's inference
+      assert(BarsIO.headerSchema(spark, s"$dir/two/*.csv").isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -83,6 +83,21 @@ class EtlJobSpec extends SparkSpec {
     assert(calls("XXX") == 3)
   }
 
+  test("connector: an interrupt stops the batch instead of failing one symbol") {
+    import graft.ingest.{ChartSource, Connector}
+    val calls = scala.collection.mutable.ListBuffer[String]()
+    val source = new ChartSource {
+      def fetch(symbol: String, p1: Long, p2: Long): String = {
+        calls += symbol
+        if (symbol == "BBB") throw new InterruptedException("shutting down") else jsonA
+      }
+    }
+    intercept[InterruptedException] {
+      Connector.fetchAll(spark, source, Seq("AAA", "BBB", "CCC"), 0L, 1L, minSuccess = 1)
+    }
+    assert(calls.toSeq == Seq("AAA", "BBB"), "no symbol is fetched after the interrupt")
+  }
+
   test("sinks: parquet + wide CSV round-trip through the compat reader") {
     val payloads = Seq(("AAA", jsonA), ("BBB", jsonB)).toDF("symbol", "json")
     val dir = java.nio.file.Files.createTempDirectory("graftetl").toString

@@ -7,8 +7,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * genuinely HEAD at write time — not a stale or hardcoded value. The
   * fields exist so cross-round comparisons stop reverse-engineering the
   * run config from loadavg; a fingerprint that lies would be worse than
-  * none. Also pins that a bench warm-up failure is recorded, not
-  * swallowed. */
+  * none. Also pins that failures are recorded, not swallowed: a failed
+  * probe, a failed bench warm-up and a failed bench query. */
 class RunEnvSpec extends SparkSpec {
 
   private val om = new ObjectMapper()
@@ -79,5 +79,36 @@ class RunEnvSpec extends SparkSpec {
     val e = om.readTree(errors.head)
     assert(e.get("class").asText().endsWith("AnalysisException"), e)
     assert(e.get("message").asText().contains("absent"), e)
+  }
+
+  test("a failed probe returns its fallback and lands in the env json's errors") {
+    assert(RunEnv.sh("graft-no-such-command") == "")
+    assert(RunEnv.probe("spec.probe", -1L)(throw new java.io.IOException("unreadable")) == -1L)
+    val errors = om.readTree(RunEnv.json(cpus = "4", reps = 1)).get("errors")
+    val entries = (0 until errors.size).map(errors.get)
+    val probe = entries.find(_.get("source").asText() == "spec.probe")
+      .getOrElse(fail(s"spec.probe missing from $errors"))
+    assert(probe.get("class").asText() == "java.io.IOException")
+    assert(probe.get("message").asText() == "unreadable")
+    assert(entries.exists(_.get("source").asText() == "graft-no-such-command"), errors)
+    // recorded once, however often the probe fails
+    RunEnv.probe("spec.probe", -1L)(throw new java.io.IOException("unreadable"))
+    assert(RunEnv.errors.count(_.contains("\"spec.probe\"")) == 1)
+    // a fatal error is not a probe failure
+    intercept[StackOverflowError](RunEnv.probe("spec.fatal", "")(throw new StackOverflowError()))
+    assert(!RunEnv.errors.exists(_.contains("spec.fatal")))
+  }
+
+  test("bench: a failed query is recorded with its name; a fatal error stops the bench") {
+    val (ok, none) = Bench.timeReps(spark, "spec_ok", reps = 2)(spark.range(10).toDF())
+    assert(ok.size == 2 && none.isEmpty)
+    val (ts, error) = Bench.timeReps(spark, "spec_missing", reps = 2)(
+      spark.read.parquet("/nonexistent/graft/spec_missing.parquet"))
+    assert(ts.isEmpty)
+    val e = om.readTree(error.getOrElse(fail("no error entry for a failing query")))
+    assert(e.get("source").asText() == "spec_missing")
+    assert(e.get("class").asText().endsWith("AnalysisException"), e)
+    intercept[InterruptedException](
+      Bench.timeReps(spark, "spec_interrupted", reps = 1)(throw new InterruptedException("stop")))
   }
 }
