@@ -67,7 +67,7 @@ class DashboardRefreshSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
-  test("job ceilings: one similarity request <= 2 jobs, one refresh <= 8 jobs in 3 queries") {
+  test("job ceilings: similarity <= 2 jobs, refresh <= 8 jobs in 3 queries") {
     val tmp = Files.createTempDirectory("graftrefresh")
     val bars = graft.io.BarsIO.readLong(spark, csv).cache()
     try {
