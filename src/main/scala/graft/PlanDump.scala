@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 
 /** Diagnostic: dump `.explain("formatted")` for declared queries to files.
   *
@@ -44,7 +45,7 @@ object PlanDump {
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name ok (${plan.count(_ == '\n')} lines)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         nFailed += 1
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       } finally Graft.releaseMaterialized(spark)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.ApiJson.jstr
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -14,21 +15,26 @@ import scala.util.control.NonFatal
   * HEAD at write time.
   *
   * A probe that fails returns its fallback ("", -1, empty) and records
-  * the failure in [[errors]], which [[json]] carries as `errors`.
+  * the failure in [[errors]], which [[json]] carries as `errors`;
+  * `Verify` records each query that fails to dump there too.
   */
 object RunEnv {
 
   private val recorded = mutable.LinkedHashSet.empty[String]
 
-  /** The probe failures recorded so far, each once, as [[errorJson]]
-    * entries naming the probe. */
+  /** The failures recorded so far, each once, as [[errorJson]]
+    * entries naming the probe or query. */
   def errors: Seq[String] = recorded.synchronized(recorded.toSeq)
+
+  /** Adds `e`, failed in `source`, to [[errors]]. */
+  private[graft] def record(e: Throwable, source: String): Unit =
+    recorded.synchronized(recorded += errorJson(e, source))
 
   /** `f`, or `fallback` once the failure is recorded in [[errors]]. */
   private[graft] def probe[A](source: String, fallback: A)(f: => A): A =
     try f catch {
       case NonFatal(e) =>
-        recorded.synchronized(recorded += errorJson(e, source))
+        record(e, source)
         fallback
     }
 
@@ -87,18 +93,11 @@ object RunEnv {
       .asScala.map(_.getName).toSeq
   }
 
-  private def jq(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }.mkString("\"", "", "\"")
-
   /** One entry of an artifact's `errors` array: a failure that the run
     * survived but must not hide, and the step it failed in, if named. */
   def errorJson(e: Throwable, source: String = ""): String =
-    (if (source.nonEmpty) s"""{"source":${jq(source)},""" else "{") +
-      s""""class":${jq(e.getClass.getName)},"message":${jq(String.valueOf(e.getMessage))}}"""
+    (if (source.nonEmpty) s"""{"source":${jstr(source)},""" else "{") +
+      s""""class":${jstr(e.getClass.getName)},"message":${jstr(String.valueOf(e.getMessage))}}"""
 
   /** JIT/code-cache state at emit time, as one JSON object. The r13
     * driver bench regressed 28 queries 2-15x at local[32] with no plan
@@ -118,7 +117,7 @@ object RunEnv {
         val u = p.getUsage; val pk = p.getPeakUsage
         val key = p.getName.toLowerCase.replace("codeheap '", "").replace("'", "")
           .replace(" ", "_").replace("-", "_")
-        s"""${jq(key)}:{"used_mb":${u.getUsed / (1024 * 1024)},"peak_mb":${pk.getUsed / (1024 * 1024)},"max_mb":${if (u.getMax > 0) u.getMax / (1024 * 1024) else -1}}"""
+        s"""${jstr(key)}:{"used_mb":${u.getUsed / (1024 * 1024)},"peak_mb":${pk.getUsed / (1024 * 1024)},"max_mb":${if (u.getMax > 0) u.getMax / (1024 * 1024) else -1}}"""
       }
     val comp = java.lang.management.ManagementFactory.getCompilationMXBean
     val compMs = if (comp != null && comp.isCompilationTimeMonitoringSupported)
@@ -128,27 +127,27 @@ object RunEnv {
       .getVMOption("CICompilerCount")
     (pools ++ Seq(s""""jit_compile_ms":$compMs""",
       s""""ci_compiler_count":${threads.getValue}""",
-      s""""ci_compiler_count_origin":${jq(threads.getOrigin.toString)}"""))
+      s""""ci_compiler_count_origin":${jstr(threads.getOrigin.toString)}"""))
       .mkString("{", ",", "}")
   }
 
   /** One JSON object with the run config an artifact needs to be
     * self-describing. `cpus` is the local[] thread count the caller
     * resolved (env default included — the artifact records what RAN,
-    * not what was set); `reps` likewise. `errors` holds every probe
-    * failure recorded up to and including this call's own probes. */
+    * not what was set); `reps` likewise. `errors` holds every failure
+    * recorded up to and including this call's own probes. */
   def json(cpus: String, reps: Int): String = {
     val sha = gitSha
-    val fields = s"""{"sha":${jq(if (sha.nonEmpty) sha else "unknown")},""" +
-      s""""git_dirty":$gitDirty,"cpus":${jq(cpus)},"reps":$reps,""" +
+    val fields = s"""{"sha":${jstr(if (sha.nonEmpty) sha else "unknown")},""" +
+      s""""git_dirty":$gitDirty,"cpus":${jstr(cpus)},"reps":$reps,""" +
       s""""heap_max_mb":$heapMaxMb,""" +
-      s""""gc":${gcNames.map(jq).mkString("[", ",", "]")},""" +
-      s""""java":${jq(sys.props.getOrElse("java.version", ""))},""" +
-      s""""jvm_args":${jq(jvmArgsFingerprint)},""" +
-      s""""conf_overlay":${jq(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))},""" +
-      s""""only":${jq(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))},""" +
+      s""""gc":${gcNames.map(jstr).mkString("[", ",", "]")},""" +
+      s""""java":${jstr(sys.props.getOrElse("java.version", ""))},""" +
+      s""""jvm_args":${jstr(jvmArgsFingerprint)},""" +
+      s""""conf_overlay":${jstr(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))},""" +
+      s""""only":${jstr(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))},""" +
       s""""jit":$jitJson,""" +
-      s""""loadavg":${jq(loadavg)},"""
+      s""""loadavg":${jstr(loadavg)},"""
     fields + s""""errors":${errors.mkString("[", ",", "]")}}"""
   }
 }

@@ -1,5 +1,7 @@
 package graft
+import graft.io.ApiJson.jstr
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,28 +18,18 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        RunEnv.record(e, name)
       } finally
         // No query's materialized frames outlive its dump.
         Graft.releaseMaterialized(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Run-env fingerprint (sha/cpus/heap/GC/loadavg) alongside the dump:
+    // Run-env fingerprint (sha/cpus/heap/GC/loadavg, and in `errors`
+    // every query that failed to dump) alongside the dump:
     // scripts/oracle_check.py embeds it in its correctness artifact so
     // every rung JSON is self-describing (r10 verdict item 1).
     Files.writeString(Paths.get(s"$outDir/run_env.json"), RunEnv.json(Graft.cpus, 1))

@@ -1,201 +1,132 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import scala.collection.immutable.ListMap
 
-/** Distributed global row numbering — the scale-safe replacement for
-  * `row_number()/ntile()` over an UNPARTITIONED window, which moves the
-  * whole input through one task (WindowExec's "No Partition Defined"
-  * warning; measured 13× superlinear on the sf1 replica in
-  * e5_zonemap_prune before this helper existed).
+/** Distributed row numbers, ntiles and running totals: the scale-safe
+  * replacements for `row_number`/`ntile`/`sum … over (order by …)` with
+  * no partitioning, and for the same functions `over (partition by
+  * group …)` when the group key has BOUNDED cardinality but each group
+  * scales with data. Both window shapes move a whole frame, or a whole
+  * group, through one task.
   *
-  * Shape: range-repartition on the sort key (each partition owns a
-  * contiguous key range) and sort ONCE within partitions; materialize
-  * that layout; count rows per partition with a partial-aggregated
-  * `spark_partition_id` count (32-row exchange — partition METADATA,
-  * not data); turn the counts into prefix offsets; then assign each
-  * row offset + its position in a single per-partition sweep over the
-  * already-sorted data. One data shuffle, one sort, no second pass
-  * re-sorting — the same two-phase structure as
-  * `clean.Cleaning.forwardFillScan`. (A first cut used
-  * `row_number over Window.partitionBy(pid)` for the local position;
-  * that re-shuffled AND re-sorted the full input — 2× the data motion
-  * for no semantic difference — so the sweep is the per-partition
-  * imperative path that mapPartitions is actually for.)
+  * All five functions run one prefix pass ([[prefixPass]]), which holds:
+  *  - the sort key is a TOTAL order (include a unique tiebreaker): range
+  *    partitioning keeps equal keys in one partition, but the order
+  *    among ties, and so their ranks and running totals, is arbitrary;
+  *  - the input is range-repartitioned and sorted within partitions on
+  *    that key once, and that layout is materialized once; the totals
+  *    collect and the running sums both read the checkpoint;
+  *  - the one collect is metadata-sized: one row of per-column totals
+  *    per non-empty partition;
+  *  - each running total is `offset(partition) + PartitionRunningSum`,
+  *    one codegen'd projection over the sorted layout, with no window
+  *    operator and no second shuffle or sort.
   *
-  * The sort key must be a TOTAL order (include a unique tiebreaker):
-  * range partitioning puts equal keys in one partition, but a
-  * non-total order would make ranks nondeterministic — same contract
-  * as a global `row_number` itself when results must be reproducible.
-  */
+  * The group variants run the pass over `group ++ sort`, so each group
+  * is one contiguous run of the global order. A group's offset is the
+  * exclusive running total at its first (lowest-ranked) row: one row per
+  * group, broadcast and joined back on a null-safe key, so a null group
+  * key is a group of its own, as in `partition by`. */
 object GlobalRank {
 
-  /** Per-partition offsets of the materialized `sorted` layout as a
-    * (metadata-sized) literal-array lookup column indexed by
-    * `spark_partition_id()`, given per-partition values `byPid`. Sized
-    * by the layout's TOTAL partition count, not the max non-empty pid:
-    * repartitionByRange leaves trailing partitions EMPTY when the sort
-    * key has fewer distinct values than partitions (single-distinct-key
-    * frames range into partition 0 only). */
-  private def offsetLookup(sorted: DataFrame, byPid: Map[Int, Long]): Column =
-    element_at(
-      typedlit((0 until sorted.rdd.getNumPartitions).map(byPid.getOrElse(_, 0L))),
-      spark_partition_id() + 1)
-
-  /** Core pass: (frame with `__gr_rank`, total row count — free from
-    * the same per-partition counts the offsets need).
-    *
-    * The rank assignment never leaves Catalyst: over the materialized
-    * range-shuffled + within-partition-sorted layout, the rank is
-    * `offset(pid) + runningCount` — a [[PartitionRunningSum]] of 1
-    * plus the per-partition offsets inlined as ONE array literal
-    * (≤ one slot per shuffle partition — metadata, not data). The
-    * counts pass stays a 32-row aggregate over the checkpoint. An
-    * earlier version swept `sorted.rdd.mapPartitionsWithIndex` +
-    * `createDataFrame`, which converted every row out of and back
-    * into the unsafe format and broke whole-stage codegen for
-    * everything downstream — a fixed ~0.2–1.7 s tax per call at bench
-    * scale for machinery only the second pass needed. */
-  private def ranked(df: DataFrame, sort: Seq[Column]): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // Materialize the sorted range layout once: the counts pass and
-    // the rank pass below both read it; without the checkpoint each
-    // would re-execute the upstream scan + shuffle + sort.
+  /** `df` in range-sorted `sort` order plus, for each `(c, out)` in
+    * `sums`, `out` = the inclusive running total of the LongType `c`
+    * (nulls add 0); and the grand total of each `c`. */
+  private def prefixPass(df: DataFrame, sums: Seq[(Column, String)],
+      sort: Seq[Column]): (DataFrame, Seq[Long]) = {
+    df.select(sums.map(_._1): _*).schema.zip(sums).foreach { case (f, (c, _)) =>
+      require(f.dataType == LongType, s"GlobalRank sums LongType only: '$c' is ${f.dataType}")
+    }
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = graft.Graft.materialize(
       df.repartitionByRange(parts, sort: _*).sortWithinPartitions(sort: _*))
-    val counts = sorted.groupBy(spark_partition_id().as("__gr_pid")).count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, n)) =>
-      (pid, acc + n)
-    }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
-    val out = sorted.withColumn("__gr_rank",
-      offsetLookup(sorted, offsets.toMap)
-        + PartitionRunningSum.running_sum(lit(1L)))
-    (out, counts.map(_._2).sum)
+    val sumCols = sums.map(s => sum(s._1))
+    val totals = sorted.groupBy(spark_partition_id())
+      .agg(sumCols.head, sumCols.tail: _*)
+      .collect()
+      .map(r => r.getInt(0) ->
+        sums.indices.map(i => if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
+      .toMap
+    // Exclusive scan over every partition of the layout: the range
+    // shuffle leaves trailing partitions empty when the key has fewer
+    // distinct values than partitions.
+    val pids = 0 until sorted.rdd.getNumPartitions
+    val starts = pids.scanLeft(sums.map(_ => 0L)) { (acc, p) =>
+      totals.get(p).fold(acc)(acc.zip(_).map { case (a, t) => a + t })
+    }
+    val out = sorted.withColumns(ListMap(sums.zipWithIndex.map { case ((c, name), i) =>
+      name -> (element_at(typedlit(pids.map(starts(_)(i))), spark_partition_id() + 1)
+        + PartitionRunningSum.running_sum(c))
+    }: _*))
+    (out, starts.last)
   }
 
   /** `df` plus `rankCol` = 1-based global row number under `sort`. */
   def withRowNumber(df: DataFrame, rankCol: String, sort: Column*): DataFrame =
-    ranked(df, sort)._1.withColumnRenamed("__gr_rank", rankCol)
+    prefixPass(df, Seq(lit(1L) -> rankCol), sort)._1
 
   /** `df` plus, for each `(srcCol, outCol)` in `sums`, the running
-    * total of `srcCol` (LongType) in global `sort` order — including
-    * the current row when `inclusive`, else the exclusive prefix (0 at
-    * the first row). The distributed replacement for
-    * `sum(x).over(Window.orderBy(...))`, which is the same
-    * single-task funnel as an unpartitioned `row_number`: range
-    * shuffle + within-partition sort (materialized once), per-column
-    * per-partition totals collected as partition METADATA (≤ one row
-    * per partition), prefix offsets broadcast, and one accumulating
-    * sweep over the already-sorted partitions. Same total-order
-    * caveat as [[withRowNumber]] — though for sums, ties in `sort`
-    * only affect intermediate (not post-aggregation) values. */
+    * total of `srcCol` (LongType, nulls as 0) in global `sort` order,
+    * including the current row when `inclusive`, else the exclusive
+    * prefix (0 at the first row): `sum(x) over (order by sort)`.
+    * For sums, ties in `sort` only change values between tied rows. */
   def withPrefixSums(df: DataFrame, sums: Seq[(String, String)],
       inclusive: Boolean, sort: Column*): DataFrame = {
     require(sums.nonEmpty, "withPrefixSums needs at least one column")
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sorted = graft.Graft.materialize(
-      df.repartitionByRange(parts, sort: _*).sortWithinPartitions(sort: _*))
-    sums.foreach { case (src, _) =>
-      require(sorted.schema(src).dataType == LongType,
-        s"withPrefixSums expects LongType for '$src', got ${sorted.schema(src).dataType}")
-    }
-    val aggs = sums.zipWithIndex.map { case ((src, _), i) =>
-      sum(col(src)).as(s"__ps_$i")
-    }
-    val totals = sorted
-      .groupBy(spark_partition_id().as("__ps_pid"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => (r.getInt(0), Array.tabulate(sums.size)(i =>
-        if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1))))
-      .sortBy(_._1)
-    // Exclusive scan of the per-partition totals, per summed column.
-    val offByPid = scala.collection.mutable.Map.empty[Int, Array[Long]]
-    val acc = Array.fill(sums.size)(0L)
-    totals.foreach { case (pid, t) =>
-      offByPid(pid) = acc.clone()
-      var i = 0; while (i < acc.length) { acc(i) += t(i); i += 1 }
-    }
-    // One codegen'd projection: each output is offset(pid) + a
-    // per-partition running sum (its own state per column); exclusive
-    // mode subtracts the current row back out (nulls counted as 0,
-    // matching the accumulator).
-    sums.zipWithIndex.foldLeft(sorted) { case (d, ((src, out), i)) =>
-      val incl = offsetLookup(sorted, offByPid.map { case (p, t) => (p, t(i)) }.toMap) +
-        PartitionRunningSum.running_sum(col(src))
-      d.withColumn(out,
-        if (inclusive) incl else incl - coalesce(col(src), lit(0L)))
-    }
+    val cum = prefixPass(df, sums.map { case (s, o) => col(s) -> o }, sort)._1
+    if (inclusive) cum
+    else cum.withColumns(ListMap(sums.map { case (s, o) =>
+      o -> (col(o) - coalesce(col(s), lit(0L)))
+    }: _*))
   }
 
-  /** Per-group `row_number` for BOUNDED-cardinality group keys whose
-    * per-group row counts scale with data. `Window.partitionBy(group)`
-    * there funnels every group through ONE task (the low-cardinality-
-    * window skew bomb); a partitioned window remains the right tool
-    * when group cardinality is high (many small partitions, no skew).
-    * Shape: ONE global ranking over (group ++ sort) order — groups are
-    * contiguous under range partitioning — then each group's rank
-    * offset is recovered as `min(global rank) − 1` per group (an
-    * aggregate over the already-materialized ranked layout, reduced to
-    * one row per group) and broadcast-joined back. No ordering
-    * assumptions beyond the global machinery's own. */
+  /** The group variants' one body: `groupCols`-partitioned running
+    * totals of each `(c, out)` in `sums`. */
+  private def groupPrefixSums(df: DataFrame, sums: Seq[(Column, String)],
+      inclusive: Boolean, groupCols: Seq[String], sort: Seq[Column]): DataFrame = {
+    require(groupCols.nonEmpty, "group ranking needs group columns")
+    val tmp = sums.indices.map(i => s"__gr_sum$i")
+    val keys = groupCols.indices.map(i => s"__gr_key$i")
+    val offs = sums.indices.map(i => s"__gr_off$i")
+    val cum = prefixPass(df, (lit(1L) -> "__gr_rank") +: sums.map(_._1).zip(tmp),
+      groupCols.map(col) ++ sort)._1
+    val excl = sums.zip(tmp).map { case ((c, _), t) => col(t) - coalesce(c, lit(0L)) }
+    val firstExcl = excl.zip(offs).map { case (e, o) => min_by(e, col("__gr_rank")).as(o) }
+    val off = cum.groupBy(groupCols.zip(keys).map { case (g, k) => col(g).as(k) }: _*)
+      .agg(firstExcl.head, firstExcl.tail: _*)
+    val sameGroup = groupCols.zip(keys).map { case (g, k) => col(g) <=> col(k) }.reduce(_ && _)
+    cum.join(broadcast(off), sameGroup)
+      .withColumns(ListMap(sums.indices.map { i =>
+        sums(i)._2 -> ((if (inclusive) col(tmp(i)) else excl(i)) - col(offs(i)))
+      }: _*))
+      .drop("__gr_rank" +: (tmp ++ keys ++ offs): _*)
+  }
+
+  /** `row_number() over (partition by groupCols order by sort)`, for
+    * bounded-cardinality group keys (see the object doc); a partitioned
+    * window stays the right tool when groups are many and small. */
   def withGroupRowNumber(df: DataFrame, rankCol: String,
-      groupCols: Seq[String], sort: Column*): DataFrame = {
-    require(groupCols.nonEmpty, "withGroupRowNumber needs group columns")
-    val gcols = groupCols.map(col)
-    val ranked = withRowNumber(df, "__gg_rank", gcols ++ sort: _*)
-    val off = ranked.groupBy(gcols: _*)
-      .agg((min(col("__gg_rank")) - 1L).as("__gg_off"))
-    ranked.join(broadcast(off), groupCols)
-      .withColumn(rankCol, col("__gg_rank") - col("__gg_off"))
-      .drop("__gg_rank", "__gg_off")
-  }
+      groupCols: Seq[String], sort: Column*): DataFrame =
+    groupPrefixSums(df, Seq(lit(1L) -> rankCol), inclusive = true, groupCols, sort)
 
-  /** Per-group running totals for BOUNDED-cardinality group keys — the
-    * [[withPrefixSums]] of `sum(x).over(Window.partitionBy(group)
-    * .orderBy(sort))`, with the same skew rationale as
-    * [[withGroupRowNumber]]. One global prefix-sum pass in
-    * (group ++ sort) order; each group's starting offset is the
-    * exclusive prefix of the per-group totals in group order, computed
-    * with a window over the DISTINCT-GROUP frame (metadata-sized under
-    * the bounded-cardinality contract; its `orderBy(group)` matches the
-    * global pass's ascending range order) and broadcast-joined back. */
+  /** Per-group [[withPrefixSums]]: `sum(x) over (partition by groupCols
+    * order by sort)`, for bounded-cardinality group keys. */
   def withGroupPrefixSums(df: DataFrame, sums: Seq[(String, String)],
       inclusive: Boolean, groupCols: Seq[String], sort: Column*): DataFrame = {
-    require(groupCols.nonEmpty, "withGroupPrefixSums needs group columns")
-    val gcols = groupCols.map(col)
-    val cum = withPrefixSums(df, sums.map { case (s, o) => (s, s"__gg_$o") },
-      inclusive, gcols ++ sort: _*)
-    val aggs = sums.map { case (src, out) => sum(col(src)).as(s"__gt_$out") }
-    val w = Window.orderBy(gcols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val off = sums.foldLeft(
-        cum.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)) {
-        case (d, (_, out)) =>
-          d.withColumn(s"__go_$out",
-            coalesce(sum(col(s"__gt_$out")).over(w), lit(0L)))
-      }
-      .select(gcols ++ sums.map(s => col(s"__go_${s._2}")): _*)
-    sums.foldLeft(cum.join(broadcast(off), groupCols)) { case (d, (_, out)) =>
-      d.withColumn(out, col(s"__gg_$out") - col(s"__go_$out"))
-        .drop(s"__gg_$out", s"__go_$out")
-    }
+    require(sums.nonEmpty, "withGroupPrefixSums needs at least one column")
+    groupPrefixSums(df, sums.map { case (s, o) => col(s) -> o }, inclusive, groupCols, sort)
   }
 
-  /** `df` plus `zoneCol` = `ntile(buckets)` under `sort`, computed from
-    * global ranks with SQL ntile's exact arithmetic (the first n mod b
-    * buckets get one extra row) — identical output to
-    * `ntile(buckets).over(Window.orderBy(sort))` without the
-    * single-partition sort. */
+  /** `df` plus `zoneCol` = `ntile(buckets)` under `sort`, from global
+    * ranks with SQL ntile's arithmetic (the first n mod b buckets get
+    * one extra row): `ntile(buckets) over (order by sort)`. */
   def withNtile(df: DataFrame, zoneCol: String, buckets: Int,
       sort: Column*): DataFrame = {
     require(buckets > 0, s"ntile needs buckets > 0, got $buckets")
-    val (ranks, n) = ranked(df, sort)
+    val (ranks, Seq(n)) = prefixPass(df, Seq(lit(1L) -> "__gr_rank"), sort)
     val base = n / buckets
     val rem = n % buckets
     val cut = (base + 1) * rem

@@ -25,7 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object ApiJson {
 
-  private def jstr(s: String): String =
+  /** `s` as a JSON string literal: quote and backslash escaped, `\n`,
+    * `\r`, `\t` short-escaped and every other control character as
+    * `\u00XX`. The one JSON string encoder of every payload, artifact
+    * and probe record. */
+  def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

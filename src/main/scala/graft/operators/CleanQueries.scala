@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import graft.align.Alignment
 import graft.clean.Cleaning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -227,7 +228,6 @@ object CleanQueries {
       .withColumn("lo", col("q1") - lit(1.5) * (col("q3") - col("q1")))
       .withColumn("hi", col("q3") + lit(1.5) * (col("q3") - col("q1")))
       .select("user_id", "lo", "hi")
-    def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     ev.join(broadcast(bounds), "user_id")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"),
@@ -308,7 +308,6 @@ object CleanQueries {
     val withMed = ev.join(broadcast(med), "user_id")
     val mad = withMed.groupBy("user_id")
       .agg(expr("percentile(abs(value - med), 0.5)").as("mad"))
-    def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     withMed.join(broadcast(mad), "user_id")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n"),

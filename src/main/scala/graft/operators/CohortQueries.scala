@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.Column
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   * grid.
   */
 object CohortQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   private def eventsWithDay(s: org.apache.spark.sql.SparkSession, dir: String) =
     Graft.table(s, dir, "events")

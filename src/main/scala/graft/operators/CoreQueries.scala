@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Core relational surface: scan → filter → project → hash-agg →
@@ -32,6 +33,10 @@ import org.apache.spark.sql.functions._
   * groupBy key exchange, which is unavoidable and key-partitioned.
   */
 object CoreQueries {
+
+  /** The policy's 1e-6 display grid, `floor(c * 1e6 + 0.5) / 1e6`: the
+    * same IEEE chain in Spark and in the DuckDB oracle SQL. */
+  def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** TPC-H Q1-style pricing summary (reference A1/A2/A3 analogue:
     * single-key groupBy with mean/sum — algorithms/technical.py:27-97). */

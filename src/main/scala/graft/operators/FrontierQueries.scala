@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.Column
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,6 @@ import org.apache.spark.sql.functions._
   * the identical double; outputs quantize on floor(x·1e6+0.5)/1e6.
   */
 object FrontierQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** K9: 2-D Pareto skyline of the part catalog — the parts for which
     * no other part is both cheaper-or-equal and larger-or-equal (strict

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import graft.ta.{Indicators, Technical}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -269,9 +270,9 @@ object IndicatorQueries {
       // sf1 gate). floor(x*1e6+0.5)/1e6 is the identical IEEE chain on
       // both sides.
       .select(col("event_id"), col("user_id"),
-        q6i(col("level")).as("level"),
-        q6i(col("trend")).as("trend"),
-        q6i(col("level") + col("trend")).as("forecast"))
+        q6(col("level")).as("level"),
+        q6(col("trend")).as("trend"),
+        q6(col("level") + col("trend")).as("forecast"))
       .orderBy("user_id", "event_id")
 
   val i14HoltSql: String = {
@@ -294,8 +295,6 @@ object IndicatorQueries {
         |  FLOOR((l + b) * 1e6 + 0.5) / 1e6 AS forecast
         |FROM h ORDER BY user_id, event_id""".stripMargin
   }
-
-  private def q6i(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** I19: additive Holt-Winters triple exponential smoothing over
     * daily closes — level + trend + a period-7 seasonal ring (α=0.3,
@@ -342,8 +341,8 @@ object IndicatorQueries {
       }
       .toDF("user_id", "day", "level", "trend", "seasonal", "fitted")
       .select(col("user_id"), to_date(col("day")).as("day"),
-        q6i(col("level")).as("level"), q6i(col("trend")).as("trend"),
-        q6i(col("seasonal")).as("seasonal"), q6i(col("fitted")).as("fitted"))
+        q6(col("level")).as("level"), q6(col("trend")).as("trend"),
+        q6(col("seasonal")).as("seasonal"), q6(col("fitted")).as("fitted"))
       .orderBy("user_id", "day")
   }
 
@@ -428,7 +427,7 @@ object IndicatorQueries {
       }
       .toDF("user_id", "day", "kama")
       .select(col("user_id"), to_date(col("day")).as("day"),
-        q6i(col("kama")).as("kama"))
+        q6(col("kama")).as("kama"))
       .orderBy("user_id", "day")
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.Column
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,6 @@ import org.apache.spark.sql.functions._
   * carried as 2×rank to avoid the .5); outputs quantize on
   * floor(x·1e6+0.5)/1e6. */
 object LedgerQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** W17: clamped running inventory — balanceₜ = min(cap, max(0,
     * balanceₜ₋₁ + Δₜ)) with Δ = +value on purchases, −value/4 on

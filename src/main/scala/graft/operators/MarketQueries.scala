@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import graft.ta.Indicators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -80,7 +81,6 @@ object MarketQueries {
     val ll = min(col("low")).over(frame)
     val rn = row_number().over(barsW)
     val w3 = barsW.rowsBetween(-2, 0)
-    def q6(c: org.apache.spark.sql.Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     PatternQueries.dailyBars(s, dir)
       .withColumn("k", when(rn >= 14 && hh =!= ll,
         lit(100.0) * (col("close") - ll) / (hh - ll)))
@@ -542,8 +542,6 @@ object MarketQueries {
       |FROM UNNEST(range(-5, 6)) AS l(lag)
       |LEFT JOIN g USING (lag)
       |ORDER BY l.lag""".stripMargin
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** I16: Keltner channels over daily bars — mid = SMA(20) of the
     * typical price (h+l+c)/3, band = mid ± 2·ATR(10) (SMA-of-true-range

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,8 +22,6 @@ import org.apache.spark.sql.functions._
   * min/max/count scalars, identical on both engines.
   */
 object OpsQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** E1: hot-key profile of the events stream — per-key counts, each
     * hot key's share of the table, and its skew factor (count / mean

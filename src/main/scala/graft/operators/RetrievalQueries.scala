@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.Column
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
   * Spark as ln(x)/ln(2)), so entropy is reported in nats.
   */
 object RetrievalQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** Whitespace tokenization shared with the text family (lower, trim,
     * collapse runs); whitespace-only docs are dropped by the callers'

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.CoreQueries.q6
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +26,6 @@ import org.apache.spark.sql.functions._
   * floor(x·1e6+0.5) grid.
   */
 object StatQueries {
-
-  private def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** F7: A/B conversion lift with a two-proportion z-statistic — users
     * deterministically split by md5 parity (the hash-based bucketing

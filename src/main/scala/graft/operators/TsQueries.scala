@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import graft.analytics.{Similarity, Volatility}
 import graft.ta.Technical
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -184,7 +185,6 @@ object TsQueries {
     val nD = col("n").cast("double")
     val denom = nD * col("sxx") - col("sx") * col("sx")
     val slope = (nD * col("sxy") - col("sx") * col("sy")) / denom
-    val grid: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     Similarity.withPos(events(s, dir), keys, order)
       .select(col("user_id"), col("pos").cast("long").as("pos"),
         col("value").cast("decimal(18,2)").as("y"))
@@ -197,9 +197,9 @@ object TsQueries {
         count(lit(1)).as("n"))
       .select(col("user_id"),
         when(denom === 0.0, lit(null).cast("double"))
-          .otherwise(grid(slope)).as("slope"),
+          .otherwise(q6(slope)).as("slope"),
         when(denom === 0.0, lit(null).cast("double"))
-          .otherwise(grid((col("sy") - slope * col("sx")) / nD)).as("intercept"),
+          .otherwise(q6((col("sy") - slope * col("sx")) / nD)).as("intercept"),
         col("n"))
       .orderBy("user_id")
   }
@@ -364,7 +364,6 @@ object TsQueries {
     val bounds = ev.groupBy("user_id").agg(
         expr("percentile(value, 0.05)").as("lo"),
         expr("percentile(value, 0.95)").as("hi"))
-    def q6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     ev.join(broadcast(bounds), "user_id")
       .select(col("event_id"), col("user_id"),
         q6(greatest(col("lo"), least(col("hi"), col("value")))).as("winsorized"),

@@ -1,7 +1,9 @@
 package graft.scale
 
 import graft.{Graft, RunEnv, SparkEntry}
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** No-oracle scale probe for the dedup/ANN family above sf10 (r12
   * verdict item 1). DuckDB cannot replay these pipelines past sf1
@@ -54,8 +56,6 @@ object DedupScaleProbe {
     "v1_knn_brute", "v2_ivf_assign", "v3_lsh_buckets", "v4_ivf_search",
     "v5_centroid_update", "v6_quantize", "v7_kmeans2", "v8_pq_codes",
     "v9_pq_search", "v10_recall_eval", "v11_cluster_purity")
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -113,7 +113,7 @@ object DedupScaleProbe {
         // Deterministic row count for the law/ratio gates (untimed;
         // single-pass mode already counted).
         if (reps > 0) rows = fn(spark, sfDir).count()
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         error = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       } finally Graft.releaseMaterialized(spark, blocking = true)
       val stages = stats.stages
@@ -142,14 +142,8 @@ object DedupScaleProbe {
     val post = scala.collection.mutable.LinkedHashMap[String, String]()
     def guarded(key: String)(body: => String): Unit =
       post += (key -> (try body catch {
-        // Same sanitization as the query error field: exception
-        // messages carry quotes/backslashes/newlines (stack-trace
-        // fragments, SQL snippets) that would make the raw jq() emit
-        // invalid JSON and crash the checker's json.load.
-        case e: Throwable => "false (postcondition error: " +
-          String.valueOf(e.getMessage).take(200)
-            .replace("\\", "/").replace("\"", "'")
-            .map(c => if (c < ' ') ' ' else c) + ")"
+        case NonFatal(e) =>
+          "false (postcondition error: " + String.valueOf(e.getMessage).take(200) + ")"
       }))
     // d1/d1b run over TextQueries.corpus (documents ∪ the +100000 exact
     // dups ∪ the +200000 stripped-suffix slice), not raw documents.
@@ -204,16 +198,15 @@ object DedupScaleProbe {
 
     val qjson = results.map { case (n, rows, walls, strag, sStage, spill, nf, nt, err) =>
       val med = if (walls.isEmpty) -1.0 else walls.sorted.apply(walls.size / 2)
-      s"${jq(n)}:{" +
+      s"${jstr(n)}:{" +
         s""""rows":$rows,"walls":[${walls.map(w => f"$w%.3f").mkString(",")}],""" +
         f""""wall_median":$med%.3f,""" +
         f""""straggler_max":$strag%.3f,"straggler_stage":$sStage,""" +
         s""""spill_bytes":$spill,"failed_tasks":$nf,"n_tasks":$nt""" +
-        err.fold("")(e => s""","error":${jq(e.replace("\\", "/").replace("\"", "'")
-          .map(c => if (c < ' ') ' ' else c))}""") + "}"
+        err.fold("")(e => s""","error":${jstr(e)}""") + "}"
     }.mkString(",")
-    val pjson = post.map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString(",")
-    val json = s"""{"metric":"dedup_scale_probe","sf_dir":${jq(sfDir)},""" +
+    val pjson = post.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
+    val json = s"""{"metric":"dedup_scale_probe","sf_dir":${jstr(sfDir)},""" +
       s""""factor":$factor,"reps":$reps,"shuffle_partitions":$shufflePartitions,""" +
       s""""queries":{$qjson},""" +
       s""""postconditions":{$pjson},"env":${RunEnv.json(Graft.cpus, reps)}}"""

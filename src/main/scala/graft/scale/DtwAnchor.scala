@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.Graft
 import graft.analytics.CompareAssets
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,8 +31,6 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.scale.DtwAnchor <sfDir> [maxUser=6000] [groups=2] [outDir=target/tmp/dtw_anchor]
   */
 object DtwAnchor {
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   /** One pair through both placements; `same` = all five fields equal. */
   private final case class PairRun(i: Int, j: Int, collected: CompareAssets.SimilarityResult,
@@ -106,13 +105,13 @@ object DtwAnchor {
         s""""wall_collected_s":${f"${p.wallC}%.2f"},"wall_aggregator_s":${f"${p.wallA}%.2f"},""" +
         s""""identical":${p.same}}"""
     }
-    println(s"""{"metric":"dtw_anchor","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"dtw_anchor","sf_dir":${jstr(sfDir)},""" +
       s""""max_user":$maxUser,"groups":$groups,"n_points":$dumped,""" +
       s""""band":$band,"collect_limit_default":4096,""" +
       s""""dtw_collected":${anchor.collected.dtw},"dtw_aggregator":${anchor.agg.dtw},""" +
       s""""arms_identical":$identical,""" +
       s""""wall_collected_s":${f"${anchor.wallC}%.2f"},"wall_aggregator_s":${f"${anchor.wallA}%.2f"},""" +
-      s""""pair_parquet":${jq(s"$outDir/pair.parquet")},""" +
+      s""""pair_parquet":${jstr(s"$outDir/pair.parquet")},""" +
       s""""pairs":${pairJson.mkString("[", ",", "]")}}""")
     if (!identical) sys.exit(1)
     spark.stop()

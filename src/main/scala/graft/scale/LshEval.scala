@@ -3,6 +3,7 @@ package graft.scale
 import graft.Graft
 import graft.dedup.{Dedup, ExactCollapse}
 import graft.vector.VectorOps
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.scale.LshEval <sfDir> [threshold=0.4]
   */
 object LshEval {
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -127,7 +126,7 @@ object LshEval {
       s"recall ${f"$adaptiveRecall%.4f"}, cand $candCount, rerank $rerankCount, " +
       s"${f"${adaptive.wall}%.1f"}s")
 
-    println(s"""{"metric":"lsh_adaptive_eval","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"lsh_adaptive_eval","sf_dir":${jstr(sfDir)},""" +
       s""""threshold":$threshold,"n_vectors":$n,""" +
       s""""truth":{"pairs":${truth.n},"wall_s":${f"${truth.wall}%.2f"}},""" +
       s""""frozen":{"bands":16,"bits_per_band":4,"rerank_pairs":$frozenCand,""" +
@@ -159,7 +158,7 @@ object LshEval {
           .count().toDouble / truthCl.nodes
       clusterJson(name, p, c, Some(recall))
     }
-    println(s"""{"metric":"lsh_cluster_eval","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"lsh_cluster_eval","sf_dir":${jstr(sfDir)},""" +
       s""""threshold":$threshold,"n_vectors":$n,""" +
       clusterJson("truth", truth, truthCl, None) + "," +
       variantJson("frozen", frozen) + "," + variantJson("adaptive", adaptive) + "}")

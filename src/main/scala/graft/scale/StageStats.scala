@@ -7,7 +7,8 @@ import scala.collection.mutable
 /** Per-stage task statistics of the jobs run between two [[clear]]
   * calls: the one measurement listener of the probes. Every read and
   * every [[clear]] first drains the listener bus, so a read covers every
-  * task that ended before it, with no sleep. A task's time is its
+  * task and every job that ended before it; it sleeps only while a job
+  * with a failed stage has yet to end. A task's time is its
   * executor run time; a stage's median is the upper median
   * (`sorted(n / 2)`). A failed task is one that ended in an error, not
   * one killed by a cancelled job. */
@@ -24,6 +25,12 @@ final class StageStats private (sc: SparkContext) extends SparkListener {
   }
   private val acc = mutable.Map[Int, Acc]()
   private val failureLines = mutable.ArrayBuffer[String]()
+  private val openJobs = mutable.Map[Int, Seq[Int]]() // job id -> its stage ids
+  private val failedStages = mutable.Set[Int]()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    openJobs(e.jobId) = e.stageIds
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val a = acc.getOrElseUpdate(e.stageId, new Acc)
@@ -42,19 +49,36 @@ final class StageStats private (sc: SparkContext) extends SparkListener {
     val a = acc.getOrElseUpdate(info.stageId, new Acc)
     a.scope = info.rddInfos.flatMap(_.scope.map(_.name)).distinct.mkString("|")
     a.attempts += 1
-    info.failureReason.foreach(r => failureLines += s"STAGEFAIL ${info.stageId}: ${r.take(120)}")
+    info.failureReason.foreach { r =>
+      failedStages += info.stageId
+      failureLines += s"STAGEFAIL ${info.stageId}: ${r.take(120)}"
+    }
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    openJobs.remove(e.jobId).foreach(failedStages --= _)
     e.jobResult match {
       case JobSucceeded => ()
       case r => failureLines += s"JOBEND ${e.jobId}: ${r.toString.take(160)}"
     }
   }
 
+  /** Drains the listener bus. Spark fails a job's caller before it
+    * posts the job's end, so while a job with a failed stage has not
+    * ended, drain again, for at most a second. */
+  private def drain(): Unit = {
+    val deadline = System.nanoTime() + 1000000000L
+    GraftCoreBridge.drainListenerBus(sc)
+    while (synchronized(openJobs.values.exists(_.exists(failedStages))) &&
+        System.nanoTime() < deadline) {
+      Thread.sleep(1)
+      GraftCoreBridge.drainListenerBus(sc)
+    }
+  }
+
   /** Every stage with an ended task or a completed attempt, by id. */
   def stages: Seq[Stage] = {
-    GraftCoreBridge.drainListenerBus(sc)
+    drain()
     synchronized {
       acc.toSeq.sortBy(_._1).map { case (id, a) =>
         val d = a.runs.sorted
@@ -67,12 +91,12 @@ final class StageStats private (sc: SparkContext) extends SparkListener {
 
   /** One line per failed stage attempt and per failed job. */
   def failures: Seq[String] = {
-    GraftCoreBridge.drainListenerBus(sc)
+    drain()
     synchronized(failureLines.toSeq)
   }
 
   def clear(): Unit = {
-    GraftCoreBridge.drainListenerBus(sc)
+    drain()
     synchronized { acc.clear(); failureLines.clear() }
   }
 }

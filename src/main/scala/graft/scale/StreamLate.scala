@@ -1,6 +1,7 @@
 package graft.scale
 
 import graft.Graft
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -50,8 +51,6 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   * Usage: runMain graft.scale.StreamLate <sfDir> [files=256] [delayS=60] [displaceS=14400]
   */
 object StreamLate {
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -178,7 +177,7 @@ object StreamLate {
     val nonVacuous = simDrops > 0 && droppedOnTime == 0 &&
       streamDrops > 0 && streamDrops <= simDrops
 
-    println(s"""{"metric":"stream_late","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"stream_late","sf_dir":${jstr(sfDir)},""" +
       s""""total_rows":$total,"files":${parts.length},"batches":$batches,""" +
       s""""delay_s":$delayS,"displace_s":$displaceS,""" +
       s""""displaced_rows":${spark.read.parquet(replayDir)

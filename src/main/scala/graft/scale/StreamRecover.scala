@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.Graft
 import graft.streaming.EventStream
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -31,8 +32,6 @@ import org.apache.spark.sql.streaming.Trigger
   * Usage: runMain graft.scale.StreamRecover <sfDir> [files=32] [filesPerTrigger=2]
   */
 object StreamRecover {
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -104,7 +103,7 @@ object StreamRecover {
     val bMinusA = b.exceptAll(a).count()
     val identical = rowsA == rowsB && aMinusB == 0 && bMinusA == 0
 
-    println(s"""{"metric":"stream_recover","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"stream_recover","sf_dir":${jstr(sfDir)},""" +
       s""""total_rows":$totalRows,"files":$nParts,"files_per_trigger":$perTrigger,""" +
       s""""killed_after_batches":$killedAfter,"planned_batches":$totalBatches,""" +
       s""""rows_a":$rowsA,"rows_b":$rowsB,""" +

@@ -2,6 +2,7 @@ package graft.scale
 
 import graft.Graft
 import graft.streaming.EventStream
+import graft.io.ApiJson.jstr
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -25,8 +26,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * Usage: runMain graft.scale.StreamScale <sfDir> [files=32] [filesPerTrigger=2]
   */
 object StreamScale {
-
-  private def jq(s: String): String = "\"" + s + "\""
 
   /** Accumulates progress across ALL micro-batches via the listener bus.
     * `q.recentProgress` is capped at spark.sql.streaming
@@ -78,7 +77,7 @@ object StreamScale {
     val (rows, batches, stateRows, peakBytes) =
       a.synchronized((a.rows, a.batches, a.stateRows, a.peakBytes))
     val rps = if (wall > 0) rows / wall else 0.0
-    s"""${jq(name)}:{"rows":$rows,"wall_s":${f"$wall%.2f"},"rows_per_s":${f"$rps%.0f"},""" +
+    s"""${jstr(name)}:{"rows":$rows,"wall_s":${f"$wall%.2f"},"rows_per_s":${f"$rps%.0f"},""" +
       s""""batches":$batches,"state_rows":$stateRows,"state_bytes_peak":$peakBytes}"""
   }
 
@@ -170,7 +169,7 @@ object StreamScale {
             .as[EventStream.InvEv]).toDF()
       })
 
-    println(s"""{"metric":"stream_scale","sf_dir":${jq(sfDir)},""" +
+    println(s"""{"metric":"stream_scale","sf_dir":${jstr(sfDir)},""" +
       s""""total_rows":$totalRows,"files":$nParts,""" +
       s""""files_per_trigger":$perTrigger,"queries":{${results.mkString(",")}}}""")
     spark.stop()

@@ -22,6 +22,13 @@ class ApiJsonSpec extends SparkSpec {
     assert(ApiJson.symbols(bars) === """{"symbols": ["A", "B", "C"]}""")
   }
 
+  test("jstr: quotes, backslashes and control characters parse back unchanged") {
+    val s = "say \"hi\" \\ C:\\tmp\nnext\u0001end\t\r"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(ApiJson.jstr(s), classOf[String])
+    assert(parsed === s)
+  }
+
   test("risk payload: rank-ordered classifications, thresholds, class counts") {
     val vols = Volatility.annualized(bars, col("close"), Seq("symbol"), Seq(col("date")))
     val json = ApiJson.risk(Volatility.classify(vols, Seq(col("symbol"))))

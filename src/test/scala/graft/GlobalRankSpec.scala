@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.GlobalRank
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -165,6 +166,53 @@ class GlobalRankSpec extends SparkSpec {
         expected.select("id", "xb")).isEmpty, s"seed $seed exclusive")
       assert(expected.select("id", "xb").exceptAll(
         exc.select("id", "xb")).isEmpty, s"seed $seed exclusive")
+    }
+  }
+
+  /** `got` and `expected` hold the same rows of `cols`. */
+  private def sameRows(got: DataFrame, expected: DataFrame, cols: Seq[String],
+      clue: String): Unit = {
+    val (g, e) = (got.select(cols.map(col): _*), expected.select(cols.map(col): _*))
+    assert(g.exceptAll(e).isEmpty && e.exceptAll(g).isEmpty, clue)
+  }
+
+  test("group variants keep a null group key as its own group") {
+    val df = groupFixture(15, 300).withColumn("grp",
+      when(col("id") % 4 === 0, lit(null).cast("string")).otherwise(col("grp")))
+    val w = Window.partitionBy("grp").orderBy(col("v"), col("id"))
+    val expected = df
+      .withColumn("r", row_number().over(w).cast("long"))
+      .withColumn("cb", coalesce(sum(col("b")).over(
+        w.rowsBetween(Window.unboundedPreceding, 0)), lit(0L)))
+      .withColumn("xb", coalesce(sum(col("b")).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val rn = GlobalRank.withGroupRowNumber(df, "r", Seq("grp"), col("v"), col("id"))
+    sameRows(rn, expected, Seq("id", "grp", "r"), "withGroupRowNumber")
+    val inc = GlobalRank.withGroupPrefixSums(df, Seq("b" -> "cb"),
+      inclusive = true, Seq("grp"), col("v"), col("id"))
+    sameRows(inc, expected, Seq("id", "grp", "cb"), "withGroupPrefixSums inclusive")
+    val exc = GlobalRank.withGroupPrefixSums(df, Seq("b" -> "xb"),
+      inclusive = false, Seq("grp"), col("v"), col("id"))
+    sameRows(exc, expected, Seq("id", "grp", "xb"), "withGroupPrefixSums exclusive")
+  }
+
+  test("job ceilings: building each function launches <= 4 jobs") {
+    // Jobs launched while the frame is built, before any action on the
+    // result.
+    val df = groupFixture(16, 400)
+    val builds = Seq[(String, () => DataFrame)](
+      "withRowNumber" -> (() => GlobalRank.withRowNumber(df, "r", col("v"), col("id"))),
+      "withNtile" -> (() => GlobalRank.withNtile(df, "z", 7, col("v"), col("id"))),
+      "withPrefixSums" -> (() => GlobalRank.withPrefixSums(df, Seq("v" -> "cv"),
+        inclusive = true, col("v"), col("id"))),
+      "withGroupRowNumber" -> (() => GlobalRank.withGroupRowNumber(df, "r",
+        Seq("grp"), col("v"), col("id"))),
+      "withGroupPrefixSums" -> (() => GlobalRank.withGroupPrefixSums(df,
+        Seq("v" -> "cv"), inclusive = true, Seq("grp"), col("v"), col("id"))))
+    val counts = builds.map { case (name, build) => name -> jobs(build())._2 }
+    info(counts.map { case (n, j) => s"$n=$j" }.mkString(" "))
+    counts.foreach { case (name, n) =>
+      assert(n <= 4, s"$name launched $n jobs")
     }
   }
 

@@ -671,6 +671,20 @@ class PlanSpec extends SparkSpec {
       s"expected the GlobalRank sweep output feeding the zone agg:\n$p")
   }
 
+  test("t8 / t15 group rankings: per-group offsets plan no Window") {
+    // withGroupPrefixSums (t8) and withGroupRowNumber (t15) take each
+    // group's offset from an aggregate over the prefix pass, not from a
+    // window over the group totals.
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    Seq("t8_pack" -> operators.TrainPrepQueries.t8Pack,
+        "t15_balanced_sample" -> operators.CorpusQueries.t15BalancedSample)
+      .foreach { case (name, q) =>
+        val optimized = q(spark, sf).queryExecution.optimizedPlan
+        assert(optimized.collectFirst { case w: LWindow => w }.isEmpty,
+          s"$name plans a Window:\n$optimized")
+      }
+  }
+
   test("running_sum: a filter above the projection never pushes below it") {
     // PartitionRunningSum's correctness rests on two optimizer contracts
     // (PartitionRunningSum.scala:23-28): PushPredicateThroughNonJoin must
