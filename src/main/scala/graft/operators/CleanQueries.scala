@@ -183,7 +183,7 @@ object CleanQueries {
           .otherwise(col("pv") + (col("nv") - col("pv")) *
             ((col("rn") - col("pr")).cast("double") / (col("nr") - col("pr")).cast("double"))))
       .select(col("event_id"), col("user_id"),
-        (floor(col("filled") * lit(1e6) + lit(0.5)) / lit(1e6)).as("v"))
+        q6(col("filled")).as("v"))
       .orderBy("user_id", "event_id")
   }
 

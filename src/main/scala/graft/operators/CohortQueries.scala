@@ -132,8 +132,7 @@ object CohortQueries {
       .join(wau, col("wday") === col("day"))
       .select(col("day"), col("dau").cast("long").as("dau"),
         col("wau").cast("long").as("wau"),
-        (floor(col("dau").cast("double") / col("wau") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("stickiness"))
+        q6(col("dau").cast("double") / col("wau")).as("stickiness"))
       .orderBy("day")
   }
 
@@ -319,10 +318,9 @@ object CohortQueries {
       .select(col("t"), col("d").cast("long"), col("n_risk").cast("long"))
       .as[(Long, Long, Long)]
       .groupByKey(_ => 0)
-      .flatMapGroups { (_: Int, it: Iterator[(Long, Long, Long)]) =>
-        val pts = it.toArray.sortBy(_._1)
+      .flatMapSortedGroups(col("t")) { (_, it) =>
         var surv = 1.0
-        pts.iterator.map { p =>
+        it.map { p =>
           surv = surv * (1.0 - p._2.toDouble / p._3)
           (p._1, p._2, p._3, surv)
         }

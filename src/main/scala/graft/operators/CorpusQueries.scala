@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -181,8 +182,7 @@ object CorpusQueries {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(col("is_dup"), lit(0L))).as("n_dup_docs"),
-        (floor(sum(col("n_chars")).cast("double") / count(lit(1)) * lit(1e6)
-          + lit(0.5)) / lit(1e6)).as("avg_chars"))
+        q6(sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"))
       .orderBy("source")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -378,8 +379,7 @@ object ExtendedQueries {
     val wDay = Window.partitionBy("day")
     daily
       .withColumn("share",
-        floor(col("sv").cast("double") / sum(col("sv")).over(wDay).cast("double")
-          * lit(1e6) + lit(0.5)) / lit(1e6))
+        q6(col("sv").cast("double") / sum(col("sv")).over(wDay).cast("double")))
       .select(col("day"), col("event_type"),
         col("sv").cast("double").as("sum_value"), col("share"))
       .orderBy("day", "event_type")
@@ -598,8 +598,8 @@ object ExtendedQueries {
           .otherwise(lit(0).cast("decimal(24,4)"))).as("promo"),
         sum(rev).as("total"))
       .select(col("month"),
-        (floor(col("promo").cast("double") / col("total").cast("double")
-          * lit(100.0) * lit(1e6) + lit(0.5)) / lit(1e6)).as("promo_share"),
+        q6(col("promo").cast("double") / col("total").cast("double") * lit(100.0))
+          .as("promo_share"),
         col("total").cast("double").as("revenue"))
       .orderBy("month")
   }

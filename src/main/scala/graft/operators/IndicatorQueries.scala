@@ -158,7 +158,7 @@ object IndicatorQueries {
     events(s, dir)
       .withColumn("dd", Indicators.drawdown(col("value"), keys, order))
       .groupBy("user_id")
-      .agg((floor(min(col("dd")) * lit(1e6) + lit(0.5)) / lit(1e6)).as("max_drawdown"),
+      .agg(q6(min(col("dd"))).as("max_drawdown"),
         count(lit(1)).as("n"))
       .orderBy("user_id")
 
@@ -180,8 +180,7 @@ object IndicatorQueries {
   val i6CumReturn: Q = (s, dir) =>
     events(s, dir)
       .select(col("event_id"), col("user_id"),
-        (floor(Indicators.cumReturn(col("value"), keys, order) * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("cum_ret"))
+        q6(Indicators.cumReturn(col("value"), keys, order)).as("cum_ret"))
       .orderBy("user_id", "event_id")
 
   val i6CumReturnSql: String =
@@ -304,7 +303,7 @@ object IndicatorQueries {
     * mean (L₀ = Σdecimal(y₁..y₇)/7, T₀ = 0, Sᵢ = yᵢ − L₀), then one
     * data-dependent update per day; `fitted` is the one-step-ahead
     * forecast L+T+S_{t−7} BEFORE observing day t. Runs as the
-    * flatMapGroups kernel (one series shuffle, O(period) state); the
+    * sorted-group kernel (one series shuffle, O(period) state); the
     * oracle replays the full 9-column state vector through a recursive
     * CTE, shifting the seasonal ring by column rotation — every step
     * is the same IEEE chain on both engines. */
@@ -316,26 +315,28 @@ object IndicatorQueries {
         col("close").cast("double"))
       .as[(Long, String, Double)]
       .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, it: Iterator[(Long, String, Double)]) =>
-        val pts = it.toArray.sortBy(_._2)
-        if (pts.length <= m) Iterator.empty
+      .flatMapSortedGroups(col("day")) { (uid, it) =>
+        val head = new Array[Double](m)
+        var n = 0
+        while (n < m && it.hasNext) { head(n) = it.next()._3; n += 1 }
+        if (n < m) Iterator.empty
         else {
-          val dsum = pts.take(m)
-            .map(p => BigDecimal(p._3).setScale(12, BigDecimal.RoundingMode.HALF_UP))
+          val dsum = head
+            .map(y => BigDecimal(y).setScale(12, BigDecimal.RoundingMode.HALF_UP))
             .sum
           var l = dsum.toDouble / m
           var t = 0.0
-          val sea = Array.tabulate(m)(i => pts(i)._3 - l)
+          val sea = head.map(_ - l)
           var idx = 0
-          (m until pts.length).iterator.map { i =>
-            val y = pts(i)._3
+          it.map { p =>
+            val y = p._3
             val sOld = sea(idx)
             val fitted = l + t + sOld
             val lNew = al * (y - sOld) + (1 - al) * (l + t)
             val tNew = be * (lNew - l) + (1 - be) * t
             val sNew = ga * (y - lNew) + (1 - ga) * sOld
             l = lNew; t = tNew; sea(idx) = sNew; idx = (idx + 1) % m
-            (uid, pts(i)._2, l, t, sNew, fitted)
+            (uid, p._2, l, t, sNew, fitted)
           }
         }
       }
@@ -392,7 +393,7 @@ object IndicatorQueries {
     * engine does best: ER/SC are pure WINDOW math (daily |Δ| snaps to
     * DECIMAL so the 10-bar frame sum is order-independent, then one
     * shared IEEE chain), and only the 1-state recurrence runs in the
-    * kernel — the window output feeds flatMapGroups on the SAME
+    * kernel — the window output feeds flatMapSortedGroups on the SAME
     * series partitioning, so no extra shuffle. Flat windows (Σ|Δ|=0)
     * define ER=1. Seeded kama = close at the first full-window bar
     * (rn=11); the oracle replays the recurrence rn→rn+1. */
@@ -417,10 +418,9 @@ object IndicatorQueries {
         col("close").cast("double"), col("sc").cast("double"))
     enriched.as[(Long, String, Double, Double)]
       .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, it: Iterator[(Long, String, Double, Double)]) =>
-        val pts = it.toArray.sortBy(_._2)
+      .flatMapSortedGroups(col("day")) { (uid, it) =>
         var kama = 0.0
-        pts.iterator.zipWithIndex.map { case (p, i) =>
+        it.zipWithIndex.map { case (p, i) =>
           kama = if (i == 0) p._3 else kama + p._4 * (p._3 - kama)
           (uid, p._2, kama)
         }

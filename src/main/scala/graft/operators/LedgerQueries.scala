@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * sorted-neighborhood dedup blocking — the deterministic,
   * sort-based complement to the LSH family in [[graft.dedup.Dedup]].
   *
-  * Scale shapes: the inventory kernel is the EMA-family flatMapGroups
+  * Scale shapes: the inventory kernel is the EMA-family sorted-group
   * pattern (one series-keyed shuffle, O(1) state); TWAP and
   * Mann-Whitney pre-aggregate per key / per distinct value before any
   * ordered pass; Theil-Sen's per-user pair fan-out is bounded by the
@@ -28,16 +28,26 @@ import org.apache.spark.sql.functions._
   * floor(x·1e6+0.5)/1e6. */
 object LedgerQueries {
 
+  /** One inventory step: add Δ, then clamp the balance into [0, cap].
+    * Shared by [[w17Inventory]] and the streaming
+    * [[graft.streaming.EventStream.InventoryProcessor]], so the batch
+    * and stream ledgers run the same IEEE chain. */
+  def inventoryStep(bal: Double, delta: Double, cap: Double): Double = {
+    val x = bal + delta
+    if (x < 0) 0.0 else if (x > cap) cap else x
+  }
+
   /** W17: clamped running inventory — balanceₜ = min(cap, max(0,
     * balanceₜ₋₁ + Δₜ)) with Δ = +value on purchases, −value/4 on
     * everything else, cap = 1000: the warehouse-ledger recurrence
     * (stock can neither go negative nor exceed capacity). The clamp
     * makes it data-dependent — NOT a prefix sum, NOT a window frame —
-    * so it runs as the flatMapGroups kernel (one shuffle keyed by
-    * user, one in-memory scan per series), and the oracle replays it
-    * as a recursive CTE stepping rn → rn+1. Both engines execute the
-    * identical add-then-clamp IEEE chain, so states agree bit-for-bit
-    * before the final floor-grid. */
+    * so it runs as a sorted-group kernel (one shuffle keyed by user,
+    * sorted by (ts, event_id), one O(1)-state fold per series), and the
+    * oracle replays it as a recursive CTE stepping rn → rn+1. The step
+    * is [[inventoryStep]]; both engines execute the identical
+    * add-then-clamp IEEE chain, so states agree bit-for-bit before the
+    * final floor-grid. */
   val w17Inventory: Q = (s, dir) => {
     import s.implicits._
     val cap = 1000.0
@@ -48,12 +58,10 @@ object LedgerQueries {
           .otherwise(-col("value") / 4).as("delta").cast("double"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, it: Iterator[(Long, Long, Long, Double)]) =>
-        val pts = it.toArray.sortBy(p => (p._2, p._3))
+      .flatMapSortedGroups(col("ts"), col("event_id")) { (uid, it) =>
         var bal = 0.0
-        pts.iterator.map { p =>
-          val x = bal + p._4
-          bal = if (x < 0) 0.0 else if (x > cap) cap else x
+        it.map { p =>
+          bal = inventoryStep(bal, p._4, cap)
           (uid, p._3, bal)
         }
       }

@@ -162,7 +162,7 @@ object MarketQueries {
         .over(w).cast("double") / lit(1e4)) /
       sum(col("l_quantity")).over(w)
     Graft.table(s, dir, "lineitem")
-      .withColumn("vwap", floor(raw * lit(1e6) + lit(0.5)) / lit(1e6))
+      .withColumn("vwap", q6(raw))
       .select("l_orderkey", "l_linenumber", "l_partkey", "vwap")
       .orderBy("l_partkey", "l_orderkey", "l_linenumber")
   }
@@ -205,8 +205,7 @@ object MarketQueries {
           .cast("double") / 20.0 / lit(1e9))
       .withColumn("cci",
         when(col("rn") >= 20 && col("md") =!= 0.0,
-          floor((col("tp") - col("sma")) / (lit(0.015) * col("md"))
-            * lit(1e6) + lit(0.5)) / lit(1e6)))
+          q6((col("tp") - col("sma")) / (lit(0.015) * col("md")))))
       .select("user_id", "day", "cci")
       .orderBy("user_id", "day")
   }
@@ -317,7 +316,7 @@ object MarketQueries {
     * doesn't chatter at the entry boundary), P&L accruing
     * pos·Δspread per step. The state is data-dependent (a window
     * can't express "held until"), so the decision loop runs in the
-    * flatMapGroups kernel — but unlike z1's display-only z, the
+    * sorted-group kernel — but unlike z1's display-only z, the
     * DECISION z here is built from exact decimal power sums
     * ((Σs, Σs²) over the 30-point frame, one IEEE chain), because a
     * one-ulp drift at the 2.0 threshold would fork the whole
@@ -352,10 +351,9 @@ object MarketQueries {
         coalesce(col("dspread"), lit(0.0)).cast("double"))
     enriched.as[(Long, Double, Double)]
       .groupByKey(_ => 0)
-      .flatMapGroups { (_: Int, it: Iterator[(Long, Double, Double)]) =>
-        val pts = it.toArray.sortBy(_._1)
+      .flatMapSortedGroups(col("pos")) { (_, it) =>
         var position = 0L; var pnl = 0.0
-        pts.iterator.map { p =>
+        it.map { p =>
           pnl = pnl + position * p._3
           position =
             if (position == 0L) { if (p._2 > 2) -1L else if (p._2 < -2) 1L else 0L }
@@ -673,10 +671,9 @@ object MarketQueries {
       .select(col("pos").cast("long"), col("ra"), col("rb"))
     aligned.as[(Long, Double, Double)]
       .groupByKey(_ => 0L)
-      .flatMapGroups { (_: Long, it: Iterator[(Long, Double, Double)]) =>
-        val pts = it.toArray.sortBy(_._1)
+      .flatMapSortedGroups(col("pos")) { (_, it) =>
         var cov = 0.0; var va = 0.0; var vb = 0.0
-        pts.iterator.zipWithIndex.map { case ((pos, ra, rb), i) =>
+        it.zipWithIndex.map { case ((pos, ra, rb), i) =>
           if (i == 0) { cov = ra * rb; va = ra * ra; vb = rb * rb }
           else {
             cov = 0.94 * cov + 0.06 * (ra * rb)
@@ -744,20 +741,18 @@ object MarketQueries {
         col("close").cast("double"))
       .as[(Long, String, Double, Double, Double)]
       .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, it: Iterator[(Long, String, Double, Double, Double)]) =>
-        val b = it.toArray.sortBy(_._2) // ISO day strings sort chronologically
-        if (b.length < 2) Iterator.empty
+      .flatMapSortedGroups(col("day")) { (uid, it) => // ISO days sort chronologically
+        val b0 = it.next()
+        if (!it.hasNext) Iterator.empty
         else {
-          var up = b(1)._5 >= b(0)._5
-          var sar = if (up) b(0)._4 else b(0)._3
-          var ep = if (up) b(1)._3 else b(1)._4
+          val b1 = it.next()
+          var up = b1._5 >= b0._5
+          var sar = if (up) b0._4 else b0._3
+          var ep = if (up) b1._3 else b1._4
           var af = 0.02
-          val out = Array.newBuilder[(Long, String, Double, Long)]
-          out += ((uid, b(1)._2, sar, if (up) 1L else -1L))
-          var i = 2
-          while (i < b.length) {
-            val h = b(i)._3; val l = b(i)._4
-            val hp = b(i - 1)._3; val lp = b(i - 1)._4
+          var hp = b1._3; var lp = b1._4
+          Iterator.single((uid, b1._2, sar, if (up) 1L else -1L)) ++ it.map { b =>
+            val h = b._3; val l = b._4
             var s1 = sar + af * (ep - sar)
             if (up) {
               if (s1 > lp) s1 = lp
@@ -768,10 +763,9 @@ object MarketQueries {
               if (h > s1) { up = true; sar = ep; ep = h; af = 0.02 }
               else { sar = s1; if (l < ep) { ep = l; af = if (af + 0.02 < 0.2) af + 0.02 else 0.2 } }
             }
-            out += ((uid, b(i)._2, sar, if (up) 1L else -1L))
-            i += 1
+            hp = h; lp = l
+            (uid, b._2, sar, if (up) 1L else -1L)
           }
-          out.result().iterator
         }
       }
       .toDF("user_id", "day", "sar_raw", "trend")

@@ -641,10 +641,10 @@ object OpsQueries {
         col("bloom_pass").cast("long").as("bloom_pass"),
         col("true_pos").cast("long").as("true_pos"),
         (col("bloom_pass") - col("true_pos")).cast("long").as("false_pos"),
-        (floor((col("bloom_pass") - col("true_pos")).cast("double") /
-          (col("n_probes") - col("member_probes")) * lit(1e6) + lit(0.5)) / lit(1e6)).as("fp_rate"),
-        (floor(col("bits_set").cast("double") / m * (col("bits_set").cast("double") / m) *
-          (col("bits_set").cast("double") / m) * lit(1e6) + lit(0.5)) / lit(1e6)).as("fp_predicted"))
+        q6((col("bloom_pass") - col("true_pos")).cast("double") /
+          (col("n_probes") - col("member_probes"))).as("fp_rate"),
+        q6(col("bits_set").cast("double") / m * (col("bits_set").cast("double") / m) *
+          (col("bits_set").cast("double") / m)).as("fp_predicted"))
   }
 
   val e4BloomPruneSql: String =

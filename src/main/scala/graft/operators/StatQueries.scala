@@ -363,12 +363,13 @@ object StatQueries {
     * with slack k = 5e-4, alarm when either side crosses h = 0.05: the
     * classic sequential drift detector a production pipeline runs beside
     * its metrics. The recurrence is not a SQL window frame, so it runs
-    * as the EMA-family flatMapGroups kernel (one shuffle keyed by
-    * series, one in-memory scan per series — [[graft.ta.Indicators]]);
-    * the oracle replays it as a recursive CTE stepping rn → rn+1. Every
-    * step is the same IEEE chain on both engines (the max-with-zero is
-    * spelled `if (x > 0) x else 0` so a −0.0 can never leak out), so
-    * states match bit-for-bit before the final 1e-6 floor-grid — with
+    * as the EMA-family sorted-group kernel (one shuffle keyed by
+    * series and sorted by day, one O(1)-state fold per series —
+    * [[graft.ta.Indicators]]); the oracle replays it as a recursive CTE
+    * stepping rn → rn+1. Every step is the same IEEE chain on both
+    * engines (the max-with-zero is spelled `if (x > 0) x else 0` so a
+    * −0.0 can never leak out), so states match bit-for-bit before the
+    * final 1e-6 floor-grid — with
     * one defined exception: a ZERO previous close makes the return
     * undefined, and the step resets both sums to 0 (the kernel guards
     * the division; the SQL side gets the same reset for free from
@@ -381,11 +382,11 @@ object StatQueries {
         col("close").cast("double"))
       .as[(Long, String, Double)]
       .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, it: Iterator[(Long, String, Double)]) =>
-        val pts = it.toArray.sortBy(_._2) // ISO day strings sort chronologically
+      .flatMapSortedGroups(col("day")) { (uid, it) => // ISO days sort chronologically
         var sp = 0.0; var sn = 0.0
-        (1 until pts.length).iterator.map { i =>
-          if (pts(i - 1)._3 == 0) {
+        var prev = it.next()._3
+        it.map { p =>
+          if (prev == 0) {
             // A zero close makes the next return undefined. Raw IEEE
             // division would latch sp at +Infinity (and the alarm at
             // true) for the REST of the series — one bad tick must not
@@ -396,11 +397,12 @@ object StatQueries {
             // user 367 closes at 0.00 on 2024-01-16.
             sp = 0.0; sn = 0.0
           } else {
-            val ret = pts(i)._3 / pts(i - 1)._3 - 1.0
+            val ret = p._3 / prev - 1.0
             val xp = sp + ret - k; sp = if (xp > 0) xp else 0.0
             val xn = sn - ret - k; sn = if (xn > 0) xn else 0.0
           }
-          (uid, pts(i)._2, sp, sn, sp > h || sn > h)
+          prev = p._3
+          (uid, p._2, sp, sn, sp > h || sn > h)
         }
       }
       .toDF("user_id", "day", "sp", "sn", "alarm")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.operators.CoreQueries.q6
 import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
 
@@ -338,8 +339,7 @@ object StreamQueries {
           .when(col("bucket") === 2, "lt_10s").when(col("bucket") === 3, "lt_60s")
           .otherwise("ge_60s").as("band"),
         col("n"),
-        (floor(col("n").cast("double") / col("total") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("share"),
+        q6(col("n").cast("double") / col("total")).as("share"),
         col("max_late_us"))
       .orderBy("bucket")
   }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Graft
 import graft.Graft.Q
 import graft.dedup.Dedup
+import graft.operators.CoreQueries.q6
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -159,7 +160,7 @@ object TextQueries {
       .withColumn("lang_total", sum(col("n")).over(
         org.apache.spark.sql.expressions.Window.partitionBy("lang")))
       .withColumn("share",
-        floor(col("n").cast("double") / col("lang_total") * lit(1e6) + lit(0.5)) / lit(1e6))
+        q6(col("n").cast("double") / col("lang_total")))
       .select("lang", "lang_pred", "n", "share")
       .orderBy("lang", "lang_pred")
 
@@ -321,8 +322,8 @@ object TextQueries {
     sizes.join(novel, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_shingles"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-        (floor(coalesce(col("n_novel"), lit(0L)).cast("double") / col("n_shingles")
-          * lit(1e6) + lit(0.5)) / lit(1e6)).as("novelty"))
+        q6(coalesce(col("n_novel"), lit(0L)).cast("double") / col("n_shingles"))
+          .as("novelty"))
       .orderBy("doc_id")
   }
 
@@ -393,10 +394,8 @@ object TextQueries {
     val one = s.range(1).toDF("one")
     one.select(
       lit(nc).as("n_candidates"), lit(nt).as("n_truth"), lit(tp).as("n_hit"),
-      (floor(lit(tp).cast("double") / lit(nc) * lit(1e6) + lit(0.5)) / lit(1e6))
-        .as("precision"),
-      (floor(lit(tp).cast("double") / lit(nt) * lit(1e6) + lit(0.5)) / lit(1e6))
-        .as("recall"))
+      q6(lit(tp).cast("double") / lit(nc)).as("precision"),
+      q6(lit(tp).cast("double") / lit(nt)).as("recall"))
   }
 
   val t40SnmEvalSql: String = nearCorpusCte +

@@ -69,8 +69,7 @@ object TsQueries {
       // 1e-6 half boundary (one sf0.1 row, ×10 replicas at the sf1
       // gate); floor(x*1e6+0.5)/1e6 is the same IEEE chain on both.
       .withColumn("ret",
-        floor(Technical.simpleReturn(col("value"), keys, order) * lit(1e6)
-          + lit(0.5)) / lit(1e6))
+        q6(Technical.simpleReturn(col("value"), keys, order)))
       .filter(col("ret").isNotNull)
       .select("event_id", "user_id", "ret")
       .orderBy("user_id", "event_id")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Graft
 import graft.Graft.Q
 import graft.multimodal.Multimodal
+import graft.operators.CoreQueries.q6
 import graft.vector.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -367,8 +368,7 @@ object VectorQueries {
       .agg(count(lit(1)).as("n_truth"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .select(col("query_id"), col("n_truth"), col("n_hit").cast("long").as("n_hit"),
-        (floor(col("n_hit").cast("double") / col("n_truth") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("recall"))
+        q6(col("n_hit").cast("double") / col("n_truth")).as("recall"))
       .orderBy("query_id")
   }
 
@@ -672,11 +672,9 @@ object VectorQueries {
       .crossJoin(hl.select(col("h").as("hl")))
       .select(
         col("nn").cast("long").as("n_points"),
-        (floor(col("mxsum").cast("double") / col("nn") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("purity"),
-        (floor(lit(2.0) * col("mi").cast("double") /
-          (col("hc").cast("double") + col("hl").cast("double")) * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("nmi"))
+        q6(col("mxsum").cast("double") / col("nn")).as("purity"),
+        q6(lit(2.0) * col("mi").cast("double") /
+          (col("hc").cast("double") + col("hl").cast("double"))).as("nmi"))
   }
 
   /** Shared WITH…a2 prefix: the deterministic 2-iteration assignment. */

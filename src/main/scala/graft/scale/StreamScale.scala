@@ -81,12 +81,12 @@ object StreamScale {
       s""""batches":$batches,"state_rows":$stateRows,"state_bytes_peak":$peakBytes}"""
   }
 
-  /** Replay layout shared by the scale/recovery harnesses: the events
+  /** Replay layout of the scale harness: the events
     * table re-written as time-ordered range files with ascending mtimes
     * (range partition index == part-file index == time order), so
     * `maxFilesPerTrigger` delivers micro-batches in arrival order.
     * Returns (totalRows, nPartFiles). */
-  def prepareReplay(spark: SparkSession, sfDir: String, nFiles: Int,
+  private def prepareReplay(spark: SparkSession, sfDir: String, nFiles: Int,
       replayDir: String): (Long, Int) = {
     import org.apache.spark.sql.functions.col
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(replayDir))

@@ -412,8 +412,9 @@ object EventStream {
     * Spark 4's transformWithState API (the arbitrary-state successor to
     * flatMapGroupsWithState, RocksDB-backed): state is ONE double per
     * user (the current balance), each micro-batch folds its rows in
-    * (ts, event_id) order through the identical add-then-clamp chain as
-    * the batch kernel (operators.LedgerQueries.w17Inventory). */
+    * (ts, event_id) order through the batch kernel's add-then-clamp step
+    * (operators.LedgerQueries.inventoryStep). transformWithState has no
+    * sorted-group form, so the batch is sorted here. */
   class InventoryProcessor(cap: Double)
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, InvEv, InvOut] {
     @transient private var bal: org.apache.spark.sql.streaming.ValueState[Double] = _
@@ -428,8 +429,7 @@ object EventStream {
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[InvOut] = {
       var b = if (bal.exists()) bal.get() else 0.0
       val out = rows.toArray.sortBy(e => (e.ts, e.event_id)).map { e =>
-        val x = b + e.delta
-        b = if (x < 0) 0.0 else if (x > cap) cap else x
+        b = graft.operators.LedgerQueries.inventoryStep(b, e.delta, cap)
         InvOut(key, e.event_id, b)
       }
       bal.update(b)

@@ -17,6 +17,17 @@ class PlanSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Every typed group kernel in `df` gets its rows sorted by Spark
+    * (`flatMapSortedGroups`): the order is part of the Sort after the key
+    * shuffle, so no task buffers and sorts a group itself. */
+  private def assertSortedGroups(df: DataFrame): Unit = {
+    val kernels = df.queryExecution.sparkPlan.collect {
+      case m: org.apache.spark.sql.execution.MapGroupsExec => m
+    }
+    assert(kernels.nonEmpty, s"expected a group kernel:\n${df.queryExecution.sparkPlan}")
+    kernels.foreach(k => assert(k.dataOrder.nonEmpty, s"unsorted group kernel:\n$k"))
+  }
+
   test("q1: filter pushed to parquet scan, schema pruned, partial agg") {
     val p = plan(CoreQueries.q1Agg(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -376,9 +387,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w14 CUSUM: one series shuffle feeds the recurrence kernel") {
-    val p = plan(graft.operators.StatQueries.w14Cusum(spark, sf))
+    val df = graft.operators.StatQueries.w14Cusum(spark, sf)
+    val p = plan(df)
     assert(p.contains("MapGroups"), s"expected the flatMapGroups kernel:\n$p")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("t35 JSD: vocab-by-source support build never degenerates to a cartesian of rows") {
@@ -420,11 +433,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w15/i17 recurrence kernels: one series shuffle feeds MapGroups") {
+    import graft.operators.IndicatorQueries._
     for (q <- Seq(graft.operators.MarketQueries.w15EwmCorr,
-        graft.operators.MarketQueries.i17Psar)) {
-      val p = plan(q(spark, sf))
+        graft.operators.MarketQueries.i17Psar, i1Ema, i2Macd, i12EwmaVol, i14Holt)) {
+      val df = q(spark, sf)
+      val p = plan(df)
       assert(p.contains("MapGroups"), s"expected the flatMapGroups kernel:\n$p")
       assert(!p.contains("CartesianProduct"))
+      assertSortedGroups(df)
     }
   }
 
@@ -498,9 +514,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("w17 inventory: one series shuffle feeds the clamp kernel") {
-    val p = plan(graft.operators.LedgerQueries.w17Inventory(spark, sf))
+    val df = graft.operators.LedgerQueries.w17Inventory(spark, sf)
+    val p = plan(df)
     assert(p.contains("MapGroups"), s"expected the flatMapGroups kernel:\n$p")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("i18 TWAP: lead and aggregation share the series partitioning") {
@@ -608,23 +626,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("z2 backtest: decision z from decimal window sums, state machine in the kernel") {
-    val p = plan(graft.operators.MarketQueries.z2PairsBacktest(spark, sf))
+    val df = graft.operators.MarketQueries.z2PairsBacktest(spark, sf)
+    val p = plan(df)
     assert(p.contains("MapGroups"), s"expected the state-machine kernel:\n$p")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("f19 kaplan-meier: per-user reduce, per-lifetime reduce, kernel over event times only") {
-    val p = plan(graft.operators.CohortQueries.f19KaplanMeier(spark, sf))
+    val df = graft.operators.CohortQueries.f19KaplanMeier(spark, sf)
+    val p = plan(df)
     assert("HashAggregate".r.findAllIn(p).length >= 2)
     assert(p.contains("MapGroups"), s"expected the survival-product kernel:\n$p")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("i20 KAMA: window-derived coefficients and the kernel share the series shuffle") {
-    val p = plan(graft.operators.IndicatorQueries.i20Kama(spark, sf))
+    val df = graft.operators.IndicatorQueries.i20Kama(spark, sf)
+    val p = plan(df)
     assert(p.contains("MapGroups"), s"expected the recurrence kernel:\n$p")
     assert(p.contains("Window"), "ER/SC must come from window math, not the kernel")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("t38 Neyman: one stratum aggregation, windows over the strata frame only") {
@@ -634,9 +658,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("i19 holt-winters: one series shuffle feeds the 9-state kernel") {
-    val p = plan(graft.operators.IndicatorQueries.i19HoltWinters(spark, sf))
+    val df = graft.operators.IndicatorQueries.i19HoltWinters(spark, sf)
+    val p = plan(df)
     assert(p.contains("MapGroups"), s"expected the flatMapGroups kernel:\n$p")
     assert(!p.contains("CartesianProduct"))
+    assertSortedGroups(df)
   }
 
   test("t37 quantile norm: rank axes build from per-value aggregates, lookup is an equi-join") {
