@@ -1,13 +1,16 @@
 package graft
 
 import scala.util.control.NonFatal
+import scala.util.matching.Regex
 
 /** Diagnostic: dump `.explain("formatted")` for declared queries to files.
   *
   *   runMain graft.PlanDump <outDir> <suffix> [names-csv|all] [sfDir]
   *
   * Writes `<outDir>/<query>_<suffix>.txt` per query — the round's plan
-  * evidence (`plans/rNN/<query>_before.txt` / `..._after.txt`). Plans are
+  * evidence (`plans/rNN/<query>_before.txt` / `..._after.txt`), passed
+  * through [[normalize]] so two dumps of one commit diff as equal, except
+  * where a plan embeds values collected while it was built. Plans are
   * the ANALYZED-at-submit physical plans (AQE `isFinalPlan=false`), which
   * is what `explain` can show without executing; Exchange counts, join
   * strategies, PushedFilters and ReadSchema are all visible at this stage.
@@ -26,6 +29,23 @@ import scala.util.control.NonFatal
   * if any requested dump fails, so missing plan evidence is loud.
   */
 object PlanDump {
+  private val Lambda = """\$\$Lambda[$\d]*/0x\p{XDigit}+""".r
+  private val IdentityHash = """(?<=[\w$])@\p{XDigit}+\b""".r
+  private val Counter = """(#|plan_id=|RDD\[)(\d+)""".r
+
+  /** `plan` with what differs between two builds of the same query
+    * masked: the JVM's lambda class names become `$$Lambda`, object
+    * identity hashes (`Class@1a2b3c4d`) are dropped, and Spark's global
+    * counters (expression ids `#N`, exchange `plan_id=N`, checkpointed
+    * `RDD[N]`) are renumbered in order of first appearance. */
+  def normalize(plan: String): String = {
+    val seen = scala.collection.mutable.Map.empty[String, Int]
+    val masked = IdentityHash.replaceAllIn(
+      Lambda.replaceAllIn(plan, Regex.quoteReplacement("$$Lambda")), "@")
+    Counter.replaceAllIn(masked,
+      m => m.group(1) + seen.getOrElseUpdate(m.matched, seen.size + 1))
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
@@ -39,8 +59,8 @@ object PlanDump {
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = normalize(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))

@@ -267,11 +267,8 @@ object Dedup {
     // Sentinel start: round 1 is always treated as changed, so the
     // initial label sum never needs its own action.
     var prevSum: java.math.BigDecimal = null
-    var rounds = 0
     var done = false
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
     while (!done) {
-      val t0 = System.nanoTime
       val prop = labels.join(sym, col("node") === col("src"))
         .select(col("dst").as("node"), col("label"))
       val next = graft.Graft.materialize(
@@ -282,12 +279,7 @@ object Dedup {
         (s != null && prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
       labels = next
-      rounds += 1
-      if (debug)
-        System.err.println(f"[cc] round $rounds: ${(System.nanoTime - t0) / 1e9}%.2f s")
     }
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[cc] converged after $rounds rounds")
     labels
   }
 
@@ -331,11 +323,8 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
     var (prevCount, prevChk) = fingerprint(edges)
-    var rounds = 0
     var done = prevCount == 0L
-    val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
     while (!done) {
-      val t0 = System.nanoTime
       // large-star over the symmetric neighborhood view
       val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
         .unionByName(edges.select(col("hi").as("u"), col("lo").as("v")))
@@ -357,12 +346,7 @@ object Dedup {
       prevCount = c
       prevChk = chk
       edges = next
-      rounds += 1
-      if (debug)
-        System.err.println(f"[cc*] round $rounds: ${(System.nanoTime - t0) / 1e9}%.2f s ($c edges)")
     }
-    if (debug)
-      System.err.println(s"[cc*] converged after $rounds alternations")
     // at the fixed point every non-center appears as hi exactly once,
     // pointing at its component min; centers and isolated nodes label
     // themselves

@@ -16,9 +16,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the bounded-heap per-key top-k
-    // (graft.plans.TopKPerKey) plans through this strategy
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     e.injectFunction((FunctionIdentifier("cosine_sim"),
       info("cosine_sim", "cosine_sim(arrayA, arrayB) - cosine similarity, 0.0 on zero norm"),
       (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))

@@ -60,7 +60,7 @@ case class PartitionRunningSum(child: Expression)
 }
 
 object PartitionRunningSum {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 
   /** Running within-partition sum of `c` (must be LongType). */
   def running_sum(c: Column): Column = column(PartitionRunningSum(expression(c)))

@@ -56,6 +56,6 @@ case class RunLengths(child: Expression) extends UnaryExpression {
 }
 
 object RunLengthsExpr {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
   def run_lengths(a: Column): Column = column(RunLengths(expression(a)))
 }

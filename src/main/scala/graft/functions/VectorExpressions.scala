@@ -284,7 +284,7 @@ case class HammingDistance(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
   def dot_native(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
   def cosine_native(a: Column, b: Column): Column =

@@ -48,9 +48,7 @@ object Connector {
 
   /** Per-symbol outcome of a batch fetch. */
   final case class FetchReport(
-    succeeded: Seq[String], failed: Seq[(String, String)]) {
-    def successCount: Int = succeeded.size
-  }
+    succeeded: Seq[String], failed: Seq[(String, String)])
 
   /** Batch result: payload frame (symbol, json) + per-symbol report. */
   final case class FetchResult(payloads: DataFrame, report: FetchReport)

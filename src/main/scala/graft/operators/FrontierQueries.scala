@@ -679,20 +679,20 @@ object FrontierQueries {
       |  floor((n + -10.0 * sign(u - 0.5) * ln(a)) * 1e6 + 0.5) / 1e6 AS n_noisy
       |FROM z ORDER BY event_type""".stripMargin
 
-  /** K10: top-3 events per user by value — through the NATIVE
-    * whole-operator extension [[graft.plans.TopKPerKey]] (custom
-    * logical node → injected SparkStrategy → bounded-heap physical
-    * exec on both sides of the exchange), not the
-    * `row_number().over(...) <= k` idiom: the map side ships at most
-    * k rows per key per partition and the reduce side never sorts a
-    * key's full row set. The oracle IS the window idiom — agreement
-    * proves the operator's semantics against the standard plan. Total
-    * order (value desc, event_id) makes the k-cut unambiguous. */
+  /** K10: top-3 events per user by value, as the
+    * `row_number().over(...) <= k` idiom, which Spark plans as a
+    * `WindowGroupLimit`: a Partial step sorts each input partition
+    * locally (spillable) and ships at most k rows per key per
+    * partition, and a Final step after the key exchange cuts the union
+    * back to k. Total order (value desc, event_id) makes the k-cut
+    * unambiguous. */
   val k10TopkNative: Q = (s, dir) => {
-    val ev = Graft.table(s, dir, "events")
+    val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
+    Graft.table(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"))
-    graft.plans.TopKPerKey(ev, Seq("user_id"),
-        Seq(("value", true), ("event_id", false)), 3)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 3)
+      .drop("rk")
       .orderBy(col("user_id"), col("value").desc, col("event_id"))
   }
 

@@ -28,18 +28,6 @@ object TextOps {
     length(text) - length(stripped)
   }
 
-  /** Uppercase-letter ratio (quality signal). */
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      (length(text) - length(regexp_replace(text, "[A-Z]", ""))).cast("double")
-        / length(text))
-
-  /** English stopword hits (quality + language signal). */
-  def stopwordHits(text: Column, words: Seq[String]): Column = {
-    val pat = words.mkString("(?i)\\b(", "|", ")\\b")
-    size(split(text, pat)) - 1
-  }
-
   /** Composite quality score in [0,1]: length band + punctuation sanity +
     * stopword presence (the reference-style heuristics, engine-defined). */
   def qualityScore(text: Column): Column = {

@@ -1,26 +1,21 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.HadoopFSUtils
 
-/** Bridge into `private[sql]` internals: the Dataset constructor, so
-  * graft's custom logical operators (graft.plans) can be wrapped back
-  * into a public DataFrame, and the CSV source's header rules, so
-  * `BarsIO` can read a header exactly as inference does without a job.
-  * The one-file-in-spark's-namespace shim is the standard technique for
-  * third-party plan extensions; nothing else in the repo lives outside
-  * the graft package. */
+/** Bridge into `private[sql]` internals: the Column ⇄ Expression
+  * converters (Spark 4's api Column wraps a ColumnNode), so graft's
+  * custom Catalyst expressions can be used as Columns, and the CSV
+  * source's header rules, so `BarsIO` can read a header exactly as
+  * inference does without a job. The one-file-in-spark's-namespace shim
+  * is the standard technique for out-of-tree extensions. */
 object GraftSqlBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Column → catalyst Expression (the Spark 4 api Column wraps a
-    * ColumnNode; the converter lives behind private[sql]). */
-  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** The all-string schema the CSV source infers (header on, no type
     * inference) when `lines` are the lines of the file it reads the

@@ -258,101 +258,15 @@ class FrontierSpec extends SparkSpec {
     }
   }
 
-  test("native TopKPerKey equals the window idiom and plans heap exec on both exchange sides") {
-    import org.apache.spark.sql.functions.{col, row_number}
-    val ev = graft.Graft.table(spark, sf, "events")
-      .select(col("user_id"), col("event_id"), col("value"))
-    val native = graft.plans.TopKPerKey(ev, Seq("user_id"),
-        Seq(("value", true), ("event_id", false)), 3)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
-    val idiom = ev.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-      .drop("rk")
-    assert(native.exceptAll(idiom).isEmpty && idiom.exceptAll(native).isEmpty)
-    val p = native.queryExecution.executedPlan.toString
-    assert("TopKPerKey \\[".r.findAllIn(p).length == 2,
-      s"expected partial+final heap exec:\n$p")
-    assert(p.contains("Exchange hashpartitioning"),
-      s"the final heap must require key clustering:\n$p")
-    assert(!p.contains("Window"), "the native path must not fall back to the window idiom")
-  }
-
-  test("TopKPerKey partial pass flushes under a tiny row budget and stays exact") {
-    import org.apache.spark.sql.functions.{col, row_number}
-    val ev = graft.Graft.table(spark, sf, "events")
-      .select(col("event_id"), col("user_id"), col("value"))
-    // event_id is unique, so every row opens its own heap — the
-    // near-unique-key worst case the flush budget exists for
-    spark.conf.set("spark.graft.topk.partialFlushRows", "64")
-    try {
-      val native = graft.plans.TopKPerKey(ev, Seq("event_id"), Seq(("value", true)), 1)
-      native.collect()
-      // collect() through AQE wrappers — a plain plan.collect stops at
-      // AdaptiveSparkPlanExec / QueryStageExec boundaries
-      def find(p: org.apache.spark.sql.execution.SparkPlan): Seq[graft.plans.TopKPerKeyExec] = {
-        val here = p match {
-          case e: graft.plans.TopKPerKeyExec if e.partial => Seq(e)
-          case _ => Seq.empty
-        }
-        val below = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        here ++ below.flatMap(find)
-      }
-      val partials = find(native.queryExecution.executedPlan)
-      assert(partials.nonEmpty, "partial exec missing from the plan")
-      assert(partials.head.metrics("flushes").value > 0,
-        "a 64-row budget over thousands of unique keys must have flushed")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_id").orderBy(col("value").desc)
-      val idiom = ev.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 1).drop("rk")
-      assert(native.exceptAll(idiom).isEmpty && idiom.exceptAll(native).isEmpty,
-        "flushed partials must re-reduce to exactly the window idiom's rows")
-    } finally spark.conf.unset("spark.graft.topk.partialFlushRows")
-    intercept[IllegalArgumentException] {
-      graft.plans.TopKPerKey(ev, Seq("event_id"), Seq(("value", true)), 0)
-    }
-  }
-
-  test("TopKPerKey partial pass flushes when the memory manager denies the grant") {
-    import org.apache.spark.sql.functions.{col, row_number}
-    val ev = graft.Graft.table(spark, sf, "events")
-      .select(col("event_id"), col("user_id"), col("value"))
-    // Cap the consumer's total unified-memory grant at 16 KiB: the heap
-    // map's estimated bytes exceed that within a few hundred unique
-    // keys, so every segment ends through the denial→flush path the
-    // real pool-exhaustion case takes (acquireMemory is exercised for
-    // real; only the grant total is faked).
-    spark.conf.set("spark.graft.topk.testMaxGrantBytes", (16 * 1024).toString)
-    try {
-      val native = graft.plans.TopKPerKey(ev, Seq("event_id"), Seq(("value", true)), 1)
-      native.collect()
-      def find(p: org.apache.spark.sql.execution.SparkPlan): Seq[graft.plans.TopKPerKeyExec] = {
-        val here = p match {
-          case e: graft.plans.TopKPerKeyExec if e.partial => Seq(e)
-          case _ => Seq.empty
-        }
-        val below = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-          case other => other.children
-        }
-        here ++ below.flatMap(find)
-      }
-      val partials = find(native.queryExecution.executedPlan)
-      assert(partials.nonEmpty, "partial exec missing from the plan")
-      assert(partials.head.metrics("memFlushes").value > 0,
-        "a 16 KiB grant cap over thousands of unique keys must deny and flush")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_id").orderBy(col("value").desc)
-      val idiom = ev.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 1).drop("rk")
-      assert(native.exceptAll(idiom).isEmpty && idiom.exceptAll(native).isEmpty,
-        "memory-flushed partials must re-reduce to exactly the window idiom's rows")
-    } finally spark.conf.unset("spark.graft.topk.testMaxGrantBytes")
+  test("k10 plans WindowGroupLimit Partial below the key exchange and Final above it") {
+    val p = FrontierQueries.k10TopkNative(spark, sf).queryExecution.executedPlan.toString
+    val lines = p.split("\n")
+    def at(re: String): Int = lines.indexWhere(l => re.r.findFirstIn(l).isDefined)
+    val fin = at("WindowGroupLimit .*Final")
+    val exchange = at("Exchange hashpartitioning\\(user_id")
+    val partial = at("WindowGroupLimit .*Partial")
+    assert(fin >= 0 && exchange > fin && partial > exchange,
+      s"expected Final above and Partial below the key exchange:\n$p")
   }
 
   test("g6 SSSP relaxes to true weighted distances within the round budget") {

@@ -28,6 +28,15 @@ class PlanSpec extends SparkSpec {
     kernels.foreach(k => assert(k.dataOrder.nonEmpty, s"unsorted group kernel:\n$k"))
   }
 
+  test("PlanDump.normalize: one query built twice in a session dumps the same text") {
+    def dump(): String = graft.operators.CohortQueries.f19KaplanMeier(spark, sf)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    val (a, b) = (dump(), dump())
+    assert(a != b, "two builds should differ in lambda names and counters before masking")
+    assert(a.contains("$$Lambda$") && a.contains("plan_id="), a)
+    assert(PlanDump.normalize(a) == PlanDump.normalize(b))
+  }
+
   test("q1: filter pushed to parquet scan, schema pruned, partial agg") {
     val p = plan(CoreQueries.q1Agg(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
