@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.text.TextOps
+import graft.text.{QualitySignals, TextOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,6 +22,17 @@ import org.apache.spark.sql.functions._
   *    applied as a SALTED anti-join so the cap never creates the
   *    hot-key exchange it exists to prevent, with AQE skew-join as
   *    the residual backstop.
+  *
+  * Each signature has one hash family, derived from md5 so that any
+  * SQL engine with md5 reproduces it: [[minhashMd5]] and
+  * [[simhash64Md5]]/[[simhashMd5]]. Text normalization is
+  * `QualitySignals.words`/`TextOps.fingerprint`.
+  *
+  * Pairs become clusters through one of two connected-components
+  * kernels with the same contract: [[connectedComponents]] (min-label
+  * propagation; d6, d11) and [[connectedComponentsStars]]
+  * (large-star/small-star; d7, LshEval). Both stay, each faster on its
+  * graph shape; [[connectedComponentsStars]] gives the measurements.
   */
 object Dedup {
 
@@ -47,8 +58,7 @@ object Dedup {
     // per element, so an inline `words` would re-run the regex+split
     // once per shingle index (~50× per doc — measured 10-50s vs ~2s at
     // sf0.1).
-    val withWords = docs.withColumn("__words",
-      split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " "))
+    val withWords = docs.withColumn("__words", QualitySignals.words(col(textCol)))
     val words = col("__words")
     // sequence(1, 0) would DESCEND ([1,0]) — guard docs shorter than k.
     val idxs = when(size(words) >= k, sequence(lit(1), size(words) - (k - 1)))
@@ -60,25 +70,14 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash signatures: `numHashes` independent min-hashes per doc over
-    * its distinct shingles (one shuffle: groupBy doc). Seeded xxhash64
-    * family — the fast default for scale. */
-  def minhash(sh: DataFrame, numHashes: Int, idCol: String = "doc_id"): DataFrame = {
-    val hashes = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("shingle"))).as(s"h$i"))
-    sh.groupBy(col(idCol)).agg(hashes.head, hashes.tail: _*)
-  }
-
   /** MinHash signatures from an engine-neutral md5-derived 2-universal
     * family: one md5 per shingle split into h1 (60-bit) and h2 (56-bit),
     * hash_i = h1 + i·h2. Bounded: h1 + i·h2 ≤ 2^60 + (numHashes−1)·2^56,
     * which stays below 2^63−1 only for numHashes ≤ 112 — enforced, so
     * Spark's silent wraparound can never diverge from an engine where
     * BIGINT overflow errors. Any SQL engine with md5 reproduces the
-    * signatures — the oracle-checkable variant; prefer [[minhash]] when
-    * cross-engine parity isn't needed. h1/h2 land in real columns before
-    * the aggregation so the md5 runs once per shingle, not once per
-    * hash. */
+    * signatures. h1/h2 land in real columns before the aggregation so
+    * the md5 runs once per shingle, not once per hash. */
   def minhashMd5(sh: DataFrame, numHashes: Int, idCol: String = "doc_id"): DataFrame = {
     require(numHashes <= 112,
       s"numHashes=$numHashes would overflow h1 + i*h2 past Long.MaxValue (max 112)")
@@ -119,41 +118,10 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), agree.as("jaccard_est"))
   }
 
-  /** SimHash 64-bit signature of a document's word multiset. Deterministic
-    * (MurmurHash3 over words); pure Scala kernel behind a UDF. */
-  def simhash64(words: Seq[String]): Long = {
-    val counts = new Array[Int](64)
-    words.foreach { w =>
-      val h1 = scala.util.hashing.MurmurHash3.stringHash(w, 0xcafebabe).toLong & 0xffffffffL
-      val h2 = scala.util.hashing.MurmurHash3.stringHash(w, 0xdeadbeef).toLong & 0xffffffffL
-      val h = (h1 << 32) | h2
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
-        i += 1
-      }
-    }
-    var sig = 0L
-    var i = 0
-    while (i < 64) {
-      if (counts(i) > 0) sig |= (1L << i)
-      i += 1
-    }
-    sig
-  }
-
-  private val simhashUdf = udf((text: String) =>
-    Option(text).map(t =>
-      simhash64(t.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty))))
-
-  def simhash(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), simhashUdf(col(textCol)).as("simhash"))
-
-  /** SimHash with md5-derived word hashes (first 16 hex chars of
-    * md5(word), read as an unsigned 64-bit value): slower than the
-    * Murmur3 kernel but reproducible by any engine with md5 — the
-    * oracle-checkable variant. Same fold as [[simhash64]]. */
+  /** SimHash 64-bit signature of a document's word multiset, from
+    * md5-derived word hashes (first 16 hex chars of md5(word), read as
+    * an unsigned 64-bit value): bit i of the signature is set iff more
+    * words have bit i set than clear. Any engine with md5 reproduces it. */
   def simhash64Md5(words: Seq[String]): Long = {
     val digest = java.security.MessageDigest.getInstance("MD5")
     val counts = new Array[Int](64)
@@ -287,13 +255,16 @@ object Dedup {
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC 2014) — O(log²) rounds regardless of component DIAMETER,
     * where [[connectedComponents]]'s min-label propagation needs
-    * O(diameter) rounds. Same contract: (node, label), label = smallest
-    * transitively reachable id; ComponentProps proves both variants
-    * agree on random graphs. Use this one when components can be
-    * chain-shaped (measured: the d7 embedding near-dup graph takes 17
-    * propagation rounds but 4 star alternations); min-label stays the
-    * default for shallow clique-like dup clusters, where its 2-shuffle
-    * rounds are cheaper than the stars' 6.
+    * O(diameter) rounds. Same contract: (node, label) for every node of
+    * `pairs`, self-pairs included, label = smallest transitively
+    * reachable id; TextDedupSpec checks both against union-find. Use this
+    * one when components can be chain-shaped (measured: the d7 embedding
+    * near-dup graph takes 17 propagation rounds but 4 star
+    * alternations); min-label stays the kernel for shallow clique-like
+    * dup clusters, where its 2-shuffle rounds are cheaper than the
+    * stars' 6 (d6's rep graph at sf0.1, 4 cpus, warm, 5 alternating
+    * reps: min-label 1.36–1.90 s and 22 jobs, stars 2.10–3.37 s and 30
+    * jobs).
     *
     * One alternation: large-star links every strictly-larger neighbor
     * of each center u to m = min(N(u) ∪ {u}); small-star orients edges
@@ -304,13 +275,15 @@ object Dedup {
   def connectedComponentsStars(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b"): DataFrame = {
     import graft.Graft.materialize
-    val half = materialize(pairs.select(
+    // Nodes come from the pairs before the self-pair filter: a node whose
+    // only pair is (r, r) is its own component. One materialized frame
+    // feeds both, so the input pipeline runs once.
+    val canon = materialize(pairs.select(
       least(col(aCol), col(bCol)).as("lo"),
-      greatest(col(aCol), col(bCol)).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct())
-    val nodes = half.select(col("lo").as("node"))
-      .unionByName(half.select(col("hi").as("node"))).distinct()
-    var edges = half
+      greatest(col(aCol), col(bCol)).as("hi")).distinct())
+    val nodes = canon.select(col("lo").as("node"))
+      .unionByName(canon.select(col("hi").as("node"))).distinct()
+    var edges = canon.filter(col("lo") =!= col("hi"))
     // Cheap per-round fingerprint: (count, wrapping sum of per-edge
     // xxhash64). One agg job; equality is necessary for set equality,
     // so the EXACT exceptAll confirmation below only ever runs when the
@@ -621,8 +594,7 @@ object Dedup {
     val repDocs = ExactCollapse.reps(tagged, idCol)
     val mem = ExactCollapse.members(tagged, idCol)
     val eligible = repDocs
-      .withColumn("__ws",
-        split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " "))
+      .withColumn("__ws", QualitySignals.words(col(textCol)))
       .filter(size(col("__ws")) <= MaxDelWords)
     val rows = eligible
       .withColumn("__n", size(col("__ws")))
@@ -675,8 +647,7 @@ object Dedup {
     * toward duplication), one output row per segment occurrence. */
   def segments(docs: DataFrame, segLen: Int, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val withWords = docs.withColumn("__words",
-      split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " "))
+    val withWords = docs.withColumn("__words", QualitySignals.words(col(textCol)))
     val words = col("__words")
     val n = when(length(trim(col(textCol))) === 0, 0).otherwise(size(words))
     val idxs = when(n > 0, sequence(lit(0), floor((n - 1) / segLen).cast("int")))

@@ -3,6 +3,8 @@ package graft.operators
 import graft.Graft
 import graft.Graft.Q
 import graft.operators.CoreQueries.q6
+import graft.text.QualitySignals.words
+import graft.text.TextOps.fingerprint
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +21,6 @@ import org.apache.spark.sql.functions._
   * keyed shuffles on the bigram/unigram, no pairwise blowup.
   */
 object CorpusQueries {
-
-  private def words(c: org.apache.spark.sql.Column) =
-    split(regexp_replace(lower(trim(c)), "\\s+", " "), " ")
 
   /** Emptiness gate shared with TrainPrepQueries: whitespace-only text
     * counts zero tokens (`split` alone would yield `[""]`). */
@@ -175,7 +174,7 @@ object CorpusQueries {
     * integer sum / count on the IEEE display grid. */
   val t19SourceProfile: Q = (s, dir) => {
     val docs = Graft.table(s, dir, "documents")
-      .withColumn("fp", md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")))
+      .withColumn("fp", fingerprint(col("text")))
     val dupFps = docs.groupBy("fp").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).select("fp")
     docs.join(dupFps.withColumn("is_dup", lit(1L)), Seq("fp"), "left")
@@ -206,7 +205,7 @@ object CorpusQueries {
     * aggregate, the set ops are keyed anti/semi joins underneath. */
   val u3SetOps: Q = (s, dir) => {
     val docs = Graft.table(s, dir, "documents")
-      .withColumn("fp", md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")))
+      .withColumn("fp", fingerprint(col("text")))
       .withColumn("src_n", substring(col("source"), 4, 10).cast("int"))
     val a = docs.filter(col("src_n") < 10).select("fp").distinct()
     val b = docs.filter(col("src_n") >= 10).select("fp").distinct()

@@ -4,7 +4,7 @@ import graft.Graft
 import graft.Graft.Q
 import graft.operators.CoreQueries.q6
 import graft.ta.{Indicators, Technical}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Technical-indicator queries over the `events` series (user_id = series
@@ -27,9 +27,6 @@ object IndicatorQueries {
   private val keys = Seq("user_id")
   private def order: Seq[Column] = Seq(col("ts"), col("event_id"))
 
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Graft.table(s, dir, "events").select("event_id", "user_id", "ts", "value")
-
   private val ordCte =
     """WITH RECURSIVE ord AS (
       |  SELECT event_id, user_id, value,
@@ -38,7 +35,7 @@ object IndicatorQueries {
 
   /** I1: EMA(20) per series (recurrence kernel). */
   val i1Ema: Q = (s, dir) =>
-    Indicators.ema(events(s, dir), 20)
+    Indicators.ema(Graft.events(s, dir), 20)
       .select(col("event_id"), col("user_id"), round(col("ema"), 6).as("ema"))
       .orderBy("user_id", "event_id")
 
@@ -59,7 +56,7 @@ object IndicatorQueries {
   /** I2: MACD(12, 26, 9) per series — three chained EMA recurrences in one
     * kernel pass (fast, slow, and the signal EMA over their difference). */
   val i2Macd: Q = (s, dir) =>
-    Indicators.macd(events(s, dir))
+    Indicators.macd(Graft.events(s, dir))
       .select(col("event_id"), col("user_id"),
         round(col("macd"), 6).as("macd"),
         round(col("signal"), 6).as("signal"),
@@ -94,7 +91,7 @@ object IndicatorQueries {
   /** I3: Bollinger(20, 2) bands, null warm-up like SMA. */
   val i3Bollinger: Q = (s, dir) => {
     val (mid, up, lo) = Indicators.bollinger(col("value"), 20, 2.0, keys, order)
-    events(s, dir)
+    Graft.events(s, dir)
       .select(col("event_id"), col("user_id"),
         round(mid, 6).as("mid"), round(up, 6).as("upper"), round(lo, 6).as("lower"))
       .orderBy("user_id", "event_id")
@@ -118,7 +115,7 @@ object IndicatorQueries {
   /** I4: Cutler RSI(14) — simple-average gains/losses over the last 14
     * changes; 100 on zero average loss. */
   val i4Rsi: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .select(col("event_id"), col("user_id"),
         round(Indicators.rsiCutler(col("value"), 14, keys, order), 6).as("rsi"))
       .orderBy("user_id", "event_id")
@@ -155,7 +152,7 @@ object IndicatorQueries {
     * on virtual 6-dp ties where engine ROUNDs disagree — i6's identical
     * shape was caught by the sf1-jitter gate (1 row in 1e6). */
   val i5Drawdown: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .withColumn("dd", Indicators.drawdown(col("value"), keys, order))
       .groupBy("user_id")
       .agg(q6(min(col("dd"))).as("max_drawdown"),
@@ -178,7 +175,7 @@ object IndicatorQueries {
     * (−0.8959375) out of 1 M rows — the exact divergence class the r7
     * numeric policy bans. */
   val i6CumReturn: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .select(col("event_id"), col("user_id"),
         q6(Indicators.cumReturn(col("value"), keys, order)).as("cum_ret"))
       .orderBy("user_id", "event_id")
@@ -192,7 +189,7 @@ object IndicatorQueries {
   /** I7: rolling lag-1 autocorrelation (30-row frame) per series. */
   val i7RollingAutocorr: Q = (s, dir) => {
     val ac = Indicators.withRollingAutocorr(
-      events(s, dir), "value", 30, keys, order, "autocorr")
+      Graft.events(s, dir), "value", 30, keys, order, "autocorr")
     ac.select(col("event_id"), col("user_id"),
         round(when(isnan(col("autocorr")), lit(null)).otherwise(col("autocorr")), 6)
           .as("autocorr"))
@@ -221,7 +218,7 @@ object IndicatorQueries {
     * input; the oracle replays the recurrence as a recursive CTE like
     * i1/i2. */
   val i12EwmaVol: Q = (s, dir) => {
-    val rets = events(s, dir)
+    val rets = Graft.events(s, dir)
       .withColumn("ret", Technical.logReturnStrict(col("value"), keys, order))
       .filter(col("ret").isNotNull)
       .select(col("event_id"), col("user_id"), col("ts"),
@@ -262,7 +259,7 @@ object IndicatorQueries {
     * written as CAST(k AS DOUBLE)/10 on both engines so the smoothing
     * factors are the identical doubles). */
   val i14Holt: Q = (s, dir) =>
-    Indicators.holt(events(s, dir), 3.0 / 10, 1.0 / 10)
+    Indicators.holt(Graft.events(s, dir), 3.0 / 10, 1.0 / 10)
       // floor-grid, not round(): Spark rounds the exact binary double
       // while DuckDB rounds a float multiply — states within one ULP of
       // the 1e-6 half boundary split between engines (40/1M rows at the

@@ -311,7 +311,7 @@ object QualityQueries {
     * independently mergeable across partitions. */
   val t27HllBySource: Q = (s, dir) => {
     val docs = Graft.table(s, dir, "documents")
-      .select(col("source"), md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("fp"))
+      .select(col("source"), graft.text.TextOps.fingerprint(col("text")).as("fp"))
     val exact = docs.groupBy("source").agg(countDistinct(col("fp")).as("n_exact"))
     Sketches.hllEstimateBy(docs, col("fp"), 8, Seq("source"))
       .join(exact, "source")

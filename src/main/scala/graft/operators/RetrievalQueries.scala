@@ -35,7 +35,7 @@ object RetrievalQueries {
     * empty-term filters. */
   private def docWords(s: org.apache.spark.sql.SparkSession, dir: String) =
     Graft.table(s, dir, "documents")
-      .withColumn("ws", split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " "))
+      .withColumn("ws", graft.text.QualitySignals.words(col("text")))
 
   /** T30: inverted-index build over word bigrams — term → document
     * frequency + the first 10 posting doc_ids. Bigram terms, not

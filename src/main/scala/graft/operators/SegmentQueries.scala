@@ -131,7 +131,7 @@ object SegmentQueries {
     * the report a curation run actually ships. One window on the
     * fingerprint + one aggregation on source. */
   val t23CurationFunnel: Q = (s, dir) => {
-    val ws = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
+    val ws = graft.text.QualitySignals.words(col("text"))
     val docs = Graft.table(s, dir, "documents")
       .withColumn("n",
         when(length(trim(col("text"))) === 0, 0).otherwise(size(ws)))

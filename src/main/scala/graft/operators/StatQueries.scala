@@ -448,7 +448,7 @@ object StatQueries {
   val t35JsdDrift: Q = (s, dir) => {
     val tok = Graft.table(s, dir, "documents")
       .withColumn("term",
-        explode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")))
+        explode(graft.text.QualitySignals.words(col("text"))))
       .filter(col("term") =!= "")
     val bySrc = tok.groupBy("source", "term").agg(count(lit(1)).as("c"))
     val srcTot = bySrc.groupBy("source").agg(sum("c").as("stot"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Graft
 import graft.Graft.Q
+import graft.text.QualitySignals.words
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +19,6 @@ import org.apache.spark.sql.functions._
   * the shared-shingle groups, and the eval side is tiny (broadcast).
   */
 object TrainPrepQueries {
-
-  private def words(c: org.apache.spark.sql.Column) =
-    split(regexp_replace(lower(trim(c)), "\\s+", " "), " ")
 
   /** T7: overlapping token-window chunking (size 50, stride 40). Chunk
     * identity is pinned by an md5 of the chunk text, so the oracle

@@ -23,9 +23,6 @@ object TsQueries {
   private val keys = Seq("user_id")
   private def order: Seq[Column] = Seq(col("ts"), col("event_id"))
 
-  private def events(s: SparkSession, dir: String): DataFrame =
-    Graft.table(s, dir, "events").select("event_id", "user_id", "ts", "value")
-
   private val orderedCte =
     """WITH r AS (
       |  SELECT event_id, user_id, value,
@@ -34,7 +31,7 @@ object TsQueries {
 
   /** W1 strict/volatility variant: invalid pairs omitted. */
   val w1LogReturns: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .withColumn("ret", round(Technical.logReturnStrict(col("value"), keys, order), 6))
       .filter(col("ret").isNotNull)
       .select("event_id", "user_id", "ret")
@@ -49,7 +46,7 @@ object TsQueries {
   /** W1 zero/technical variant: rows with a predecessor always emit, 0.0
     * on invalid pairs (technical.py:151-153). */
   val w1LogReturnsZero: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .withColumn("ret", round(Technical.logReturnZero(col("value"), keys, order), 6))
       .filter(col("ret").isNotNull)
       .select("event_id", "user_id", "ret")
@@ -64,7 +61,7 @@ object TsQueries {
 
   /** W2: simple returns, 0.0 on zero denominator. */
   val w2SimpleReturns: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       // floor-grid, not round(): engines disagree within one ULP of the
       // 1e-6 half boundary (one sf0.1 row, ×10 replicas at the sf1
       // gate); floor(x*1e6+0.5)/1e6 is the same IEEE chain on both.
@@ -84,7 +81,7 @@ object TsQueries {
 
   /** W3+W9: trailing SMA(20) with null warm-up rows. */
   val w3Sma20: Q = (s, dir) =>
-    events(s, dir)
+    Graft.events(s, dir)
       .withColumn("sma", round(Technical.sma(col("value"), 20, keys, order), 6))
       .select("event_id", "user_id", "sma")
       .orderBy("user_id", "event_id")
@@ -100,7 +97,7 @@ object TsQueries {
       |ORDER BY user_id, event_id""".stripMargin
 
   private def volsDf(s: SparkSession, dir: String): DataFrame =
-    Volatility.annualized(events(s, dir), col("value"), keys, order)
+    Volatility.annualized(Graft.events(s, dir), col("value"), keys, order)
       .withColumn("vol", round(col("vol"), 6))
 
   private val volsCte = orderedCte +
@@ -184,7 +181,7 @@ object TsQueries {
     val nD = col("n").cast("double")
     val denom = nD * col("sxx") - col("sx") * col("sx")
     val slope = (nD * col("sxy") - col("sx") * col("sy")) / denom
-    Similarity.withPos(events(s, dir), keys, order)
+    Similarity.withPos(Graft.events(s, dir), keys, order)
       .select(col("user_id"), col("pos").cast("long").as("pos"),
         col("value").cast("decimal(18,2)").as("y"))
       .groupBy("user_id")
@@ -231,7 +228,7 @@ object TsQueries {
   /** C9: chart downsampling — every k-th element so ≤200 points survive
     * per series (app.py:213-238). */
   val c9Downsample: Q = (s, dir) => {
-    val posed = Similarity.withPos(events(s, dir), keys, order)
+    val posed = Similarity.withPos(Graft.events(s, dir), keys, order)
       .withColumn("n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
       .withColumn("step", greatest(lit(1), ceil(col("n") / 200).cast("int")))
@@ -255,7 +252,7 @@ object TsQueries {
   /** K6: candlestick tail-limit — last N points of one series, ascending
     * (app.py:366-381). */
   val k6TailLimit: Q = (s, dir) =>
-    events(s, dir).filter(col("user_id") === 1)
+    Graft.events(s, dir).filter(col("user_id") === 1)
       .orderBy(col("ts").desc, col("event_id").desc)
       .limit(30)
       .select(col("event_id"), round(col("value"), 6).as("value"))
@@ -276,7 +273,7 @@ object TsQueries {
   val a18MaxDrawdown: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events(s, dir)
+    Graft.events(s, dir)
       .withColumn("dd", col("value") / max(col("value")).over(w) - 1.0)
       .groupBy("user_id")
       .agg(round(min(col("dd")), 6).as("max_drawdown"),
@@ -308,7 +305,7 @@ object TsQueries {
     // The windowed frame feeds TWO aggregations (spell lengths + the
     // per-user summary); materialize it once or the three window passes
     // run twice end-to-end (measured ~2x at sf1).
-    val uw = Graft.materialize(events(s, dir)
+    val uw = Graft.materialize(Graft.events(s, dir)
       .withColumn("under",
         (col("value") < max(col("value")).over(run)).cast("long"))
       .withColumn("spell", sum(lit(1L) - col("under")).over(run))
@@ -398,7 +395,7 @@ object TsQueries {
     * non-broadcast join: the per-series var05 frame is k rows. */
   val a19VarCvar: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val rets = events(s, dir)
+    val rets = Graft.events(s, dir)
       .withColumn("prev", lag(col("value"), 1).over(w))
       .filter(col("prev") > 0 && col("value") > 0)
       .withColumn("ret", floor(log(col("value") / col("prev")) * lit(1e9) + lit(0.5)) / lit(1e9))
@@ -449,7 +446,7 @@ object TsQueries {
     * absorbs, per the repo policy for corr/regr outputs. */
   val a20Beta: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val rets = events(s, dir)
+    val rets = Graft.events(s, dir)
       .withColumn("prev", lag(col("value"), 1).over(w))
       .filter(col("prev") > 0 && col("value") > 0)
       .withColumn("rn", row_number().over(w))
@@ -495,7 +492,7 @@ object TsQueries {
   val w12RollingMedian: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(-10, 10)
-    events(s, dir)
+    Graft.events(s, dir)
       .select(col("event_id"), col("user_id"),
         round(expr("percentile(value, 0.5)").over(w), 6).as("rmed"))
       .orderBy("user_id", "event_id")

@@ -82,12 +82,11 @@ object VectorQueries {
       |SELECT bucket, COUNT(*) AS n FROM bits GROUP BY bucket ORDER BY bucket""".stripMargin
 
   /** D5: embedding-cosine near-dup pairs (cos ≥ 0.4, a < b) via the
-    * DEFAULT scale path: banded LSH candidate generation (16 bands ×
-    * 4 sign bits, planes = embeddings vec_id 8–71) + exact per-candidate
+    * fixed banded path: LSH candidate generation (16 bands × 4 sign
+    * bits, planes = embeddings vec_id 8–71) + exact per-candidate
     * rerank — pairs only ever materialize within a bucket, never the n²
-    * cross join (VectorOps.lshNearDupPairs; the all-pairs sweep is the
-    * small-input fallback behind VectorOps.nearDupPairs). Deterministic
-    * given the plane set, so the oracle replays the identical banding. */
+    * cross join (VectorOps.lshNearDupPairs). Deterministic given the
+    * plane set, so the oracle replays the identical banding. */
   /** Frozen-parameter banded-LSH near-dup pair pipeline (d5; d7
     * consumed it too until the r13 sanctioned re-point — kept as the
     * bit-identical r5-catalog replay and the fixed baseline d9-style

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *  - frozen: the catalog's d5/d7 banding (16 bands × 4 bits, corpus
   *    planes vec_id 8–71, the oracle-replayable parameterization);
   *  - adaptive: the density-adaptive banding
-  *    ([[VectorOps.lshNearDupAdaptive]], library defaults), which
-  *    `nearDupPairsAuto` runs above its 10 000-vector brute-force limit.
+  *    ([[VectorOps.lshNearDupAdaptive]], library defaults), the pair
+  *    set d5a and d7 run.
   *
   * Each set feeds the cluster stage (large-star/small-star connected
   * components, min-id keeper per cluster — embeddings carry no quality

@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object QualitySignals {
 
-  /** The corpus word normalization shared with dedup.Dedup: lowercase,
-    * trim, whitespace → single space, split on space. */
+  /** The one corpus word normalization (dedup.Dedup and the text
+    * queries use it too): lowercase, trim, whitespace → single space,
+    * split on space. [[TextOps.fingerprint]] is md5 of the same text
+    * before the split. */
   def words(text: Column): Column =
     split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
 

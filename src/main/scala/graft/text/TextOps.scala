@@ -54,7 +54,7 @@ object TextOps {
 
   /** Language-ID decision given already-projected marker scores, in
     * LangMarkers priority order (ties go to the earlier language). */
-  def langIdFromScores(cjk: Column, scores: Seq[(String, Column)]): Column = {
+  private def langIdFromScores(cjk: Column, scores: Seq[(String, Column)]): Column = {
     val best = scores.tail.foldLeft(
       struct(scores.head._2.as("score"), lit(scores.head._1).as("lang"))) {
       case (acc, (lang, score)) =>
@@ -89,15 +89,6 @@ object TextOps {
         LangMarkers.map { case (lang, _) => lang -> col(s"__s_$lang") }))
       .drop("__cjk" +: LangMarkers.map { case (lang, _) => s"__s_$lang" }: _*)
   }
-
-  /** Single-Column language-ID (small inputs / tests). Prefer
-    * [[withLangId]] on scans: this form re-evaluates the marker regexes
-    * inside the decision tree. */
-  def langId(text: Column): Column =
-    langIdFromScores(regexp_count(text, lit("[一-鿿]")),
-      LangMarkers.map { case (lang, pat) =>
-        lang -> regexp_count(lower(text), lit(pat))
-      })
 
   /** Document fingerprint: md5 of the whitespace-normalized, lowercased
     * text — the canonical exact-dedup key. */

@@ -110,11 +110,9 @@ object VectorOps {
 
   /** All-pairs cosine near-dup pairs (a < b, rounded cos ≥ threshold).
     *
-    * SMALL-INPUT FALLBACK ONLY — the default near-dup path is the
-    * bucketed [[lshNearDupPairs]]; use this exact sweep when the vector
-    * set is small enough that O(n²) is cheaper than bucketing (see
-    * [[nearDupPairs]] for the dispatcher), or as the recall oracle in
-    * tests.
+    * The exact O(n²) sweep: the ground truth the banded paths
+    * ([[lshNearDupPairs]], [[lshNearDupAdaptive]]) are measured against
+    * in the tests and in LshEval. No catalog query runs it.
     *
     * Implementation note: Catalyst higher-order functions (zip_with +
     * aggregate) are interpreted per element, which makes an O(n²·d)
@@ -178,8 +176,8 @@ object VectorOps {
     vectors.select(col(idCol), bits.reduce(_ + _).as("bucket"))
   }
 
-  /** Banded-LSH near-dup pairs — the DEFAULT scale path for embedding
-    * near-duplicate detection (a < b, rounded cos ≥ threshold).
+  /** Banded-LSH near-dup pairs with fixed parameters (a < b, rounded
+    * cos ≥ threshold): d5's 16 bands × 4 bits, which its oracle replays.
     *
     * Plan shape (never O(n²) over the corpus):
     *  1. one narrow map per vector computes `bands` bucket keys, each the
@@ -241,23 +239,9 @@ object VectorOps {
     graft.dedup.ExactCollapse.expand(scored, mem, "vec_a", "vec_b")
   }
 
-  /** Near-dup dispatcher: the exact O(n²) sweep only under
-    * `bruteForceLimit` vectors (where it is cheaper than bucketing);
-    * banded LSH + rerank — the scale path — otherwise. The size probe
-    * is `limit(bruteForceLimit + 1).count()` — it stops scanning as
-    * soon as limit+1 rows are seen, so dispatch costs O(limit) rows,
-    * not a full O(n) pass over 100 TB just to pick a branch. */
-  def nearDupPairs(vectors: DataFrame, threshold: Double,
-      planes: Seq[(Long, Seq[Float])], bands: Int, rowsPerBand: Int,
-      bruteForceLimit: Long = 10000L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    if (vectors.limit((bruteForceLimit + 1).toInt).count() <= bruteForceLimit)
-      allPairsCosine(vectors, threshold, idCol, vecCol)
-    else
-      lshNearDupPairs(vectors, planes, bands, rowsPerBand, threshold, idCol, vecCol)
-
   // ---------------------------------------------------------------------
-  // Density-adaptive banding — the production near-dup path.
+  // Density-adaptive banding: [[lshNearDupAdaptive]], which d5a, d7 and
+  // LshEval run.
   //
   // The fixed 16-band × 4-bit parameterization above is kept for the
   // frozen d5 catalog entry (the oracle replays that exact banding), but
@@ -373,9 +357,9 @@ object VectorOps {
       predictedRecall: Double,
       candidates: DataFrame, prefiltered: DataFrame, pairs: DataFrame)
 
-  /** Density-adaptive banded-LSH near-dup pairs — the PRODUCTION default
-    * for embedding near-duplicate detection at scale (a < b, rounded
-    * cos ≥ threshold). Differences from the fixed-parameter
+  /** Density-adaptive banded-LSH near-dup pairs (a < b, rounded
+    * cos ≥ threshold), the path whose parameters follow the corpus
+    * size. Differences from the fixed-parameter
     * [[lshNearDupPairs]], each attacking one measured cost center of the
     * sf1-jitter cliff (SCALE_r07.md §5):
     *
@@ -517,20 +501,4 @@ object VectorOps {
       StrictMath.exp(-x * x / 2.0)
     if (x >= 0) 0.5 * (1.0 + y) else 0.5 * (1.0 - y)
   }
-
-  /** Production near-dup entry point: exact sweep under
-    * `bruteForceLimit`, density-adaptive banded LSH above it. The fixed
-    * [[nearDupPairs]]/[[lshNearDupPairs]] stay for parameter-pinned
-    * callers (the frozen d5 catalog entry replays 16 × 4 banding
-    * bit-identically); new pipelines should use this. */
-  def nearDupPairsAuto(vectors: DataFrame, threshold: Double,
-      seed: Long = 42L, bruteForceLimit: Long = 10000L,
-      targetOccupancy: Long = 64, recallFloor: Double = 0.95,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    if (vectors.limit((bruteForceLimit + 1).toInt).count() <= bruteForceLimit)
-      allPairsCosine(vectors, threshold, idCol, vecCol)
-    else
-      lshNearDupAdaptive(vectors, threshold, seed = seed,
-        targetOccupancy = targetOccupancy, recallFloor = recallFloor,
-        idCol = idCol, vecCol = vecCol).pairs
 }

@@ -3,8 +3,8 @@ package graft
 import graft.vector.VectorOps
 import org.apache.spark.sql.functions._
 
-/** Density-adaptive banded LSH (VectorOps.lshNearDupAdaptive) — the
-  * production near-dup path. Verifies the policy formulas, the seeded
+/** Density-adaptive banded LSH (VectorOps.lshNearDupAdaptive), the
+  * near-dup path of d5a and d7. Verifies the policy formulas, the seeded
   * plane determinism, the packed sign-bit expression against its
   * literal-plane equivalent, and end-to-end recall/precision against
   * the exact all-pairs sweep on a seeded corpus large enough for the
@@ -131,17 +131,11 @@ class AdaptiveLshSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("nearDupPairsAuto dispatches brute under the limit, adaptive above") {
-    val small = corpus.limit(100)
-    val brute = VectorOps.allPairsCosine(small, 0.4)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val auto = VectorOps.nearDupPairsAuto(small, 0.4)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert(auto == brute) // under the limit: exactly the brute sweep
-    val big = VectorOps.nearDupPairsAuto(corpus, 0.4, bruteForceLimit = 100)
+  test("adaptive pipeline at the default occupancy: no false positives, recall >= 0.95") {
+    val got = VectorOps.lshNearDupAdaptive(corpus, 0.4).pairs
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val truth = VectorOps.allPairsCosine(corpus, 0.4)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert((big -- truth).isEmpty && big.size >= (truth.size * 0.95).toInt)
+    assert((got -- truth).isEmpty && got.size >= (truth.size * 0.95).toInt)
   }
 }

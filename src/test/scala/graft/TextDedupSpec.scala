@@ -22,7 +22,7 @@ class TextDedupSpec extends SparkSpec {
       ("这是一个中文文本", "zh"),
       ("xyzzy qwerty", "und"))
       .toDF("text", "expected")
-    val got = df.select(TextOps.langId(col("text")).as("got"), col("expected"))
+    val got = TextOps.withLangId(df, "text", "got").select("got", "expected")
       .as[(String, String)].collect()
     got.foreach { case (g, e) => assert(g == e, s"expected $e got $g") }
   }
@@ -63,7 +63,7 @@ class TextDedupSpec extends SparkSpec {
       (3L, "completely unrelated content about database engines and query planners today"))
       .toDF("doc_id", "text")
     val sh = Dedup.shingles(docs, 3)
-    val sigs = Dedup.minhash(sh, 16)
+    val sigs = Dedup.minhashMd5(sh, 16)
     val cands = Dedup.minhashCandidates(sigs, 4, 4)
     val scored = Dedup.minhashJaccard(sigs, cands, 16)
       .as[(Long, Long, Double)].collect()
@@ -74,15 +74,15 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("simhash: identical docs same signature; near-dups low hamming") {
-    val a = Dedup.simhash64("the quick brown fox jumps over the lazy dog".split(" ").toSeq)
-    val b = Dedup.simhash64("the quick brown fox jumps over the lazy dog".split(" ").toSeq)
+    val a = Dedup.simhash64Md5("the quick brown fox jumps over the lazy dog".split(" ").toSeq)
+    val b = Dedup.simhash64Md5("the quick brown fox jumps over the lazy dog".split(" ").toSeq)
     assert(a == b)
-    val c = Dedup.simhash64("the quick brown fox jumps over the lazy cat".split(" ").toSeq)
+    val c = Dedup.simhash64Md5("the quick brown fox jumps over the lazy cat".split(" ").toSeq)
     assert(java.lang.Long.bitCount(a ^ c) <= 16)
     val docs = Seq((1L, "one two three four five six seven eight nine ten"),
       (2L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(Dedup.simhash(docs), 8)
+    val pairs = Dedup.simhashPairs(Dedup.simhashMd5(docs), 8)
       .as[(Long, Long, Int)].collect()
     assert(pairs.toSeq == Seq((1L, 2L, 0)))
   }
@@ -90,12 +90,9 @@ class TextDedupSpec extends SparkSpec {
   test("simhash UDFs are null-safe; minhashMd5 rejects overflow-prone sizes") {
     val docs = Seq((1L, "alpha beta"), (2L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    val sigs = Dedup.simhash(docs).orderBy("doc_id")
+    val sigs = Dedup.simhashMd5(docs).orderBy("doc_id")
       .as[(Long, Option[Long])].collect().toSeq
     assert(sigs.head._2.isDefined && sigs(1)._2.isEmpty)
-    val sigsMd5 = Dedup.simhashMd5(docs).orderBy("doc_id")
-      .as[(Long, Option[Long])].collect().toSeq
-    assert(sigsMd5(1)._2.isEmpty)
     val sh = Dedup.shingles(Seq((1L, "a b c d")).toDF("doc_id", "text"), 2)
     intercept[IllegalArgumentException] { Dedup.minhashMd5(sh, 113) }
     assert(Dedup.minhashMd5(sh, 112).columns.length == 113) // doc_id + 112 hashes
@@ -158,7 +155,10 @@ class TextDedupSpec extends SparkSpec {
         .filter { case (a, b) => a != b },
       // two cliques bridged by one edge
       (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)) ++
-        (for (a <- 11L to 15L; b <- a + 1 to 15L) yield (b, a)) :+ (5L, 11L))
+        (for (a <- 11L to 15L; b <- a + 1 to 15L) yield (b, a)) :+ (5L, 11L),
+      // self-pairs, as a collapsed rep graph carries them: 7 and 9 have
+      // no other pair and are components of their own
+      Seq((7L, 7L), (1L, 2L), (2L, 2L), (9L, 9L), (2L, 3L)))
     graphs.zipWithIndex.foreach { case (g, i) =>
       val df = g.toDF("doc_a", "doc_b")
       val want = unionFind(g)

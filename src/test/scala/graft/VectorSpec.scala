@@ -142,18 +142,6 @@ class VectorSpec extends SparkSpec {
     assert(recall >= 0.95, s"recall $recall below the banding-curve expectation")
   }
 
-  test("nearDupPairs dispatches to the exact sweep only under the limit") {
-    val small = vecs
-    val planes = Seq.tabulate(8)(i =>
-      (i.toLong, Seq.fill(3)(scala.util.Random.nextGaussian().toFloat)))
-    val viaDispatch = VectorOps.nearDupPairs(small, 0.5, planes,
-        bands = 4, rowsPerBand = 2, bruteForceLimit = 100)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val exact = VectorOps.allPairsCosine(small, 0.5)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert(viaDispatch == exact)
-  }
-
   test("multimodal decoder: parses real container headers, deterministic") {
     val docs = Seq((1L, "abcd"), (2L, "héllo")).toDF("doc_id", "text")
     val got = Multimodal.decode(Multimodal.attachPayload(docs))
