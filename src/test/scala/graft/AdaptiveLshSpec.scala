@@ -131,7 +131,7 @@ class AdaptiveLshSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("adaptive pipeline at the default occupancy: no false positives, recall >= 0.95") {
+  test("adaptive pipeline at default occupancy: no false positives, recall >= 0.95") {
     val got = VectorOps.lshNearDupAdaptive(corpus, 0.4).pairs
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     val truth = VectorOps.allPairsCosine(corpus, 0.4)
