@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   *  - windows are the n−w+1 full windows (w clamped to [2, n])
   *  - gaps[i] = 1 iff open[i] > high[i−1], both non-null
   *
-  * Scale: ups/gaps are one lag window; the per-window run counting is a
-  * sliding collect_list frame + the X4 kernel — O(n·w) work per series,
-  * identical to the reference, but each series is one partition-local
-  * sorted scan; no extra shuffle beyond the series key exchange.
+  * Scale: ups/gaps are one lag window; the streak histogram works on
+  * run ids and never collects a window into an array (constant-size
+  * rows, the reference's O(n·w) work).
   */
 object Patterns {
 
@@ -32,13 +31,6 @@ object Patterns {
     if (cur > 0) runs += cur
     runs.toSeq
   }
-
-  private val runLengthsUdf = udf((w: Seq[Int]) => runLengths(w))
-
-  /** Native codegen'd form of the kernel (functions.RunLengths); the UDF
-    * above stays as the cross-check reference. */
-  private def runLengthsNative(c: Column): Column =
-    graft.functions.RunLengthsExpr.run_lengths(c)
 
   /** Binary up-day column: 1 iff value > previous value, both non-null;
     * first row of each series is 0 (patterns.py:92-104). */
@@ -57,38 +49,13 @@ object Patterns {
   }
 
   /** W4/X4: per-window clipped streak histogram. Output: one row per
-    * (series key, streak_len) with its frequency across all windows. */
+    * (series key, streak_len) with its frequency across all windows.
+    * Clipping a window can neither merge nor split a maximal 1-run, so
+    * every entry is the overlap of one global run [s, e] with one window
+    * [p, p+w−1]: gaps-and-islands run ids, then each run explodes only
+    * its ≤ L+w−1 overlapping window starts. Equals [[runLengths]] over
+    * every clipped window (PatternsSpec). */
   def streakHistogram(df: DataFrame, value: Column, keys: Seq[String],
-      order: Seq[Column], windowSize: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    val upped = df.withColumn("up", ups(value, keys, order))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-    // frame clips at partition end, so for n < w the single window at rn=1
-    // is the whole (short) series — matching the reference's w-clamped-to-n.
-    val windows = upped
-      .withColumn("winUps",
-        collect_list(col("up")).over(w.rowsBetween(0, windowSize - 1)))
-      .filter(col("rn") <= greatest(lit(1), col("n") - windowSize + 1))
-    windows
-      .select(keys.map(col) :+ explode(runLengthsNative(col("winUps"))).as("streak_len"): _*)
-      .groupBy((keys :+ "streak_len").map(col): _*)
-      .agg(count(lit(1)).as("freq"))
-  }
-
-  /** [[streakHistogram]] for series too big for one task — the same
-    * histogram with NO per-row collect_list arrays.
-    *
-    * The frame version materializes an O(w) array per row (O(n·w)
-    * transient memory per series, one series per task — fine for
-    * calendar-bounded series, the reference's regime). This variant is
-    * the unbounded-series path: clipping a window can neither merge nor
-    * split a maximal 1-run, so every histogram entry is exactly the
-    * overlap of one global run [s, e] with one window [p, p+w−1].
-    * Gaps-and-islands run ids (one window pass), then each run explodes
-    * only its ≤ L+w−1 overlapping window starts — constant-size rows,
-    * same O(n·w) work, nothing collected per row. */
-  def streakHistogramRuns(df: DataFrame, value: Column, keys: Seq[String],
       order: Seq[Column], windowSize: Int): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     val upped = df.withColumn("up", ups(value, keys, order))

@@ -72,35 +72,6 @@ object Similarity {
     if (va == 0.0 || vb == 0.0) 0.0 else cov / math.sqrt(va * vb)
   }
 
-  /** A10 fast path: per-series reduction to arrays (one shuffle), then
-    * the k²/2 pair sweep as a broadcast crossJoin + kernel — right when
-    * k is moderate and series fit a row (the reference's regime: 20 ×
-    * ~1760 points). The SQL `heatmap` below stays the scale path when k
-    * or series length makes collected arrays unreasonable. */
-  def heatmapCollected(posed: DataFrame, k: String): DataFrame = {
-    val spark = posed.sparkSession
-    import spark.implicits._
-    val arrs = posed.groupBy(col(k))
-      .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pts"))
-      .select(col(k).cast("long").as("_1"), col("pts.v").as("_2"))
-    val b = arrs.select(col("_1").as("_3"), col("_2").as("_4"))
-    // symmetry pruning like the reference: compute ka <= kb, mirror after
-    val upper = arrs.crossJoin(broadcast(b))
-      .filter(col("_1") <= col("_3"))
-      .as[(Long, Seq[Double], Long, Seq[Double])]
-      .map { case (ka, va, kb, vb) =>
-        val c = if (ka == kb) 1.0 else pearsonKernel(va.toArray, vb.toArray)
-        (ka, kb, c)
-      }
-      .toDF("ka", "kb", "corr")
-      // feeds both branches; k² rows — see Graft.materialize for the
-      // localCheckpoint-vs-cache trade.
-      .transform(graft.Graft.materialize)
-    upper.unionByName(
-      upper.filter(col("ka") < col("kb"))
-        .select(col("kb").as("ka"), col("ka").as("kb"), col("corr")))
-  }
-
   /** A10's triangle: one row per pair `ka <= kb` of series keyed by `k`,
     * with the Pearson correlation of their aligned values (0.0 on zero
     * variance, app.py:322-353) and 1.0 on the diagonal. One join and one

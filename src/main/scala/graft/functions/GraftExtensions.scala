@@ -22,8 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("dot_product"),
       info("dot_product", "dot_product(arrayA, arrayB) - double-precision dot product"),
       (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("run_lengths"),
-      info("run_lengths", "run_lengths(intArray) - lengths of maximal 1-runs"),
-      (exprs: Seq[Expression]) => RunLengths(exprs(0))))
   }
 }

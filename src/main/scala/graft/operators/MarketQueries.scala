@@ -30,6 +30,16 @@ object MarketQueries {
   private def barOrder: Seq[Column] = Seq(col("day"))
   private def barsW = Window.partitionBy("user_id").orderBy("day")
 
+  /** One side of the aligned pair of w10, z1, z2 and x6: user `uid`'s
+    * values as (pos, `name`), pos the row position in (ts, event_id)
+    * order. */
+  private def series(s: SparkSession, dir: String, uid: Int, name: String): DataFrame =
+    Graft.events(s, dir).filter(col("user_id") === uid)
+      .withColumn("pos", row_number().over(
+        Window.partitionBy("user_id").orderBy("ts", "event_id")))
+      .select(col("pos"), col("value"))
+      .withColumnRenamed("value", name)
+
   /** I8: ATR(14) (SMA-of-true-range) over daily bars. The frame average
     * runs as an exact decimal sum / 14 (window sums are segment-tree
     * reassociated in some engines — float policy, CoreQueries); the
@@ -277,13 +287,7 @@ object MarketQueries {
     * aligned by row position — the rolling form of the reference's pairwise
     * Pearson (similarity.py:100-193). */
   val w10RollingCorr: Q = (s, dir) => {
-    def series(uid: Int): DataFrame =
-      Graft.events(s, dir).filter(col("user_id") === uid)
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("user_id").orderBy("ts", "event_id")))
-        .select(col("pos"), col("value"))
-    val joined = series(1).withColumnRenamed("value", "a")
-      .join(series(2).withColumnRenamed("value", "b"), "pos")
+    val joined = series(s, dir, 1, "a").join(series(s, dir, 2, "b"), "pos")
     val w = Window.orderBy("pos")
     // Spark corr yields NaN on a zero-variance frame where SQL engines
     // yield NULL — normalize to null (same guard as i7's autocorr).
@@ -324,15 +328,9 @@ object MarketQueries {
     */
   val z2PairsBacktest: Q = (s, dir) => {
     import s.implicits._
-    def series(uid: Int) =
-      Graft.events(s, dir).filter(col("user_id") === uid)
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("user_id").orderBy("ts", "event_id")))
-        .select(col("pos"), col("value"))
     val w = Window.orderBy("pos")
     val f30 = w.rowsBetween(-29, 0)
-    val enriched = series(1).withColumnRenamed("value", "a")
-      .join(series(2).withColumnRenamed("value", "b"), "pos")
+    val enriched = series(s, dir, 1, "a").join(series(s, dir, 2, "b"), "pos")
       .withColumn("spread", col("a") - col("b"))
       .withColumn("dspread",
         col("spread") - lag(col("spread"), 1).over(w))
@@ -421,13 +419,7 @@ object MarketQueries {
     * 6-dp round, and the signal flag derives from the ROUNDED z so both
     * engines compare identical values. */
   val z1ZscoreSpread: Q = (s, dir) => {
-    def series(uid: Int) =
-      Graft.events(s, dir).filter(col("user_id") === uid)
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("user_id").orderBy("ts", "event_id")))
-        .select(col("pos"), col("value"))
-    val joined = series(1).withColumnRenamed("value", "a")
-      .join(series(2).withColumnRenamed("value", "b"), "pos")
+    val joined = series(s, dir, 1, "a").join(series(s, dir, 2, "b"), "pos")
       .withColumn("spread", col("a") - col("b"))
     val w = Window.orderBy("pos")
     val frame = w.rowsBetween(-29, 0)
@@ -497,14 +489,9 @@ object MarketQueries {
     * is a corr over the lag-shifted pair (the shift rides the existing
     * position index — no re-sort, no extra shuffle per lag). */
   val x6CrossCorr: Q = (s, dir) => {
-    def series(uid: Int) =
-      Graft.events(s, dir).filter(col("user_id") === uid)
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("user_id").orderBy("ts", "event_id")))
-        .select(col("pos"), col("value"))
-    val a = Graft.materialize(series(1).withColumnRenamed("value", "a"))
+    val a = Graft.materialize(series(s, dir, 1, "a"))
     val b = Graft.materialize(
-      series(2).withColumnRenamed("value", "b").withColumnRenamed("pos", "bpos"))
+      series(s, dir, 2, "b").withColumnRenamed("pos", "bpos"))
     val lags = (-5 to 5).map { l =>
       a.join(b, col("bpos") === col("pos") + l)
         .agg(lit(l.toLong).as("lag"),

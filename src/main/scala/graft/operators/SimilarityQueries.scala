@@ -87,11 +87,11 @@ object SimilarityQueries {
       |FROM rets a JOIN rets b ON a.pos = b.pos
       |WHERE a.user_id = 1 AND b.user_id = 2""".stripMargin
 
-  /** A10: 20×20 Pearson heatmap with symmetry pruning + mirrored output.
-    * Uses the collected-arrays fast path (20 series × ~10³ points — the
-    * reference's regime); `Similarity.heatmap` is the SQL scale path. */
+  /** A10: 20×20 Pearson heatmap with symmetry pruning + mirrored output:
+    * `Similarity.heatmap`, the dashboard's `pairCorrelations` triangle
+    * plus its mirror. */
   val a10Heatmap: Q = (s, dir) =>
-    Similarity.heatmapCollected(rets(s, dir, maxUser = 20), "user_id")
+    Similarity.heatmap(rets(s, dir, maxUser = 20), "user_id")
       .select(col("ka"), col("kb"), round(col("corr"), 6).as("pearson"))
       .orderBy("ka", "kb")
 

@@ -3,6 +3,7 @@ package graft.scale
 import graft.Graft
 import graft.streaming.EventStream
 import graft.io.ApiJson.jstr
+import org.apache.spark.{GraftCoreBridge, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -52,17 +53,11 @@ object StreamScale {
         }
       }
     }
-    /** Listener delivery is async — poll until the accumulator stops
-      * moving (stable for 300 ms, max 10 s) after awaitTermination. */
-    def settled(id: java.util.UUID): Acc = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1L
-      while (System.nanoTime() < deadline) {
-        val cur = byId.get(id).map(a => a.synchronized(a.rows + a.batches)).getOrElse(0L)
-        if (cur == last) return byId.getOrElseUpdate(id, new Acc)
-        last = cur
-        Thread.sleep(300)
-      }
+    /** Listener delivery is async: after awaitTermination every progress
+      * event of the query is posted, so draining the listener bus
+      * delivers them all. */
+    def settled(sc: SparkContext, id: java.util.UUID): Acc = {
+      GraftCoreBridge.drainListenerBus(sc)
       byId.getOrElseUpdate(id, new Acc)
     }
   }
@@ -73,7 +68,7 @@ object StreamScale {
     val t0 = System.nanoTime()
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
-    val a = acc.settled(q.id)
+    val a = acc.settled(q.sparkSession.sparkContext, q.id)
     val (rows, batches, stateRows, peakBytes) =
       a.synchronized((a.rows, a.batches, a.stateRows, a.peakBytes))
     val rps = if (wall > 0) rows / wall else 0.0

@@ -228,44 +228,16 @@ object EventStream {
   case class Session(user_id: Long, session_start: Long, n_events: Long, duration_ns: Long)
 
   /** Per-user stateful sessionizer: closes a session when a later event
-    * arrives more than gapNs after the last one; the open session stays
-    * in state across micro-batches — and stays FOREVER for a user who
-    * never returns. [[sessionizeStreamTimeout]] is the production form:
-    * same closed-session output, plus an event-time timeout that
-    * flushes idle users once the watermark passes last + gap. */
-  def sessionizeStream(events: Dataset[Ev], gapNs: Long): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, state: GroupState[SessionState]) =>
-          val sorted = evs.toSeq.sortBy(_.ts)
-          var cur = state.getOption
-          val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-          sorted.foreach { e =>
-            cur match {
-              case Some(st) if e.ts - st.last <= gapNs =>
-                cur = Some(st.copy(last = e.ts, n = st.n + 1))
-              case Some(st) =>
-                closed += Session(user, st.start, st.n, st.last - st.start)
-                cur = Some(SessionState(e.ts, e.ts, 1))
-              case None =>
-                cur = Some(SessionState(e.ts, e.ts, 1))
-            }
-          }
-          cur.foreach(state.update)
-          closed.iterator
-      }
-  }
-
-  /** [[sessionizeStream]] hardened with an EVENT-TIME TIMEOUT: an idle
-    * user's open session flushes once the watermark passes its last
-    * event + gap, instead of waiting for that user's next event (which
-    * may never come — the unbounded-state leak the plain variant
-    * declares). State per key is still one (start, last, n) triple; the
-    * timeout timestamp is re-armed on every update. Closed-session
-    * output is identical to [[sessionizeStream]]'s — the timeout only
-    * adds the flush path (StreamingSpec pins both). */
+    * arrives more than gapNs after the last one, and flushes an idle
+    * user's open session once the watermark passes its last event + gap
+    * (an EVENT-TIME TIMEOUT), so a user who never returns leaves no
+    * state behind. State per key is one (start, last, n) triple; the
+    * timeout is re-armed on every update. An event at or before the
+    * watermark, which starts at epoch 0, is dropped as late. Events are
+    * sorted within a micro-batch only: each user's events must arrive
+    * in time order across batches. Batch twin:
+    * [[sessionizeBatch]] (StreamingSpec pins the closed sessions and
+    * the flush). */
   def sessionizeStreamTimeout(events: Dataset[Ev], gapNs: Long,
       lateness: String = "10 minutes"): Dataset[Session] = {
     import events.sparkSession.implicits._
@@ -320,7 +292,7 @@ object EventStream {
     * State is one (type, from) pair per key — constant, not
     * event-grain. Events are folded in ts order within each batch;
     * cross-batch reordering would need event-time buffering (same
-    * declared caveat as [[sessionizeStream]]). Batch twin:
+    * declared caveat as [[sessionizeStreamTimeout]]). Batch twin:
     * [[graft.operators.WarehouseQueries.qScd2Intervals]] restricted to
     * its closed rows (`is_current = 0`) — StreamingSpec proves the
     * emitted sets equal. */

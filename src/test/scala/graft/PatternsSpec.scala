@@ -72,20 +72,6 @@ class PatternsSpec extends SparkSpec {
     assert(zeroed == 3)
   }
 
-  test("native RunLengths expression agrees with the Scala kernel on both eval paths") {
-    val rnd = new scala.util.Random(13)
-    val cases = Seq.fill(50)(Seq.fill(rnd.nextInt(40))(rnd.nextInt(2))) :+ Seq.empty[Int]
-    val df = cases.toDF("ups")
-    val native = df.select(graft.functions.RunLengthsExpr.run_lengths($"ups"))
-      .as[Seq[Int]].collect().toSeq
-    assert(native == cases.map(Patterns.runLengths))
-    // interpreted path too (eval without codegen): force via filter on literal
-    val one = Seq(Seq(1, 1, 0, 1)).toDF("ups")
-      .select(graft.functions.RunLengthsExpr.run_lengths($"ups"))
-      .as[Seq[Int]].head()
-    assert(one == Seq(2, 1))
-  }
-
   test("short series (n<w) uses the single clipped window") {
     val df = Seq((0, "X", 1.0), (1, "X", 2.0), (2, "X", 3.0)).toDF("i", "symbol", "close")
     val hist = Patterns.streakHistogram(df, $"close", keys, order, 5)
@@ -93,23 +79,28 @@ class PatternsSpec extends SparkSpec {
     assert(hist == Map(2 -> 1L)) // ups = [0,1,1] -> one run of 2, one window
   }
 
-  test("run-id histogram (unbounded-series path) matches the frame version") {
-    // random series exercise clipping at both run ends, short series,
-    // and multiple keys; both variants must agree cell-for-cell
+  test("streak histogram equals runLengths over every clipped window of random series") {
+    // random series exercise clipping at both run ends, short series
+    // (n < w: one window, the whole series) and multiple keys
     val rnd = new scala.util.Random(13)
     val data = (0 until 8).flatMap { k =>
       val len = 3 + rnd.nextInt(120)
       (0 until len).map(i => (i, s"S$k", rnd.nextInt(3).toDouble))
     }
     val df = data.toDF("i", "symbol", "close")
+    val ups = data.groupBy(_._2).map { case (k, rows) =>
+      val closes = rows.sortBy(_._1).map(_._3)
+      k -> (0 +: closes.zip(closes.drop(1)).map { case (a, b) => if (b > a) 1 else 0 })
+    }
     for (w <- Seq(2, 5, 20, 500)) {
-      val frame = Patterns.streakHistogram(df, $"close", keys, order, w)
+      val expected = ups.toSeq.flatMap { case (k, u) =>
+        (0 until math.max(1, u.length - w + 1))
+          .flatMap(p => Patterns.runLengths(u.slice(p, p + w))).map(k -> _)
+      }.groupBy(identity).map { case ((k, len), hits) => (k, len, hits.size.toLong) }.toSet
+      val hist = Patterns.streakHistogram(df, $"close", keys, order, w)
         .select("symbol", "streak_len", "freq")
         .as[(String, Int, Long)].collect().toSet
-      val runs = Patterns.streakHistogramRuns(df, $"close", keys, order, w)
-        .select("symbol", "streak_len", "freq")
-        .as[(String, Int, Long)].collect().toSet
-      assert(runs == frame, s"w=$w: run-id variant diverges")
+      assert(hist == expected, s"w=$w")
     }
   }
 }

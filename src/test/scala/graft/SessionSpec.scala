@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 /** Every session of the engine comes from `Graft.envSession`: it is the
   * only `SparkSession.builder(` in src/main, and `Graft.scala` is the
   * only reader of `SPARK_GRAFT_CPUS`. The test fixture, built there,
-  * carries the standard config. */
+  * carries the standard config. Nothing in src/main waits by sleeping
+  * except the connector's retry backoff and the 1 ms failed-job drain:
+  * a listener is drained, a query awaited. */
 class SessionSpec extends SparkSpec {
 
   private def occurrences(needle: String): Seq[(String, Int)] = {
@@ -22,6 +24,11 @@ class SessionSpec extends SparkSpec {
   test("one SparkSession.builder( and one SPARK_GRAFT_CPUS read in src/main, both in Graft.scala") {
     assert(occurrences("SparkSession.builder(") == Seq("Graft.scala" -> 1))
     assert(occurrences("\"SPARK_GRAFT_CPUS\"") == Seq("Graft.scala" -> 1))
+  }
+
+  test("Thread.sleep( in src/main only in Connector.scala and StageStats.scala") {
+    assert(occurrences("Thread.sleep(").sortBy(_._1) ==
+      Seq("Connector.scala" -> 1, "StageStats.scala" -> 1))
   }
 
   test("the fixture session carries the standard config") {

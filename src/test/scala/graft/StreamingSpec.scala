@@ -402,12 +402,15 @@ class StreamingSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val M = 60L * 1000 * 1000 * 1000 // one minute in ns
     val gap = 30 * M
-    val evs1 = Seq(Ev(1, 0 * M, 1.0), Ev(1, 5 * M, 1.0), Ev(2, 0 * M, 1.0))
-    val evs2 = Seq(Ev(1, 60 * M, 1.0),   // closes user 1's first session
-      Ev(2, 10 * M, 1.0), Ev(2, 100 * M, 1.0)) // closes user 2's first session
+    // offset from epoch: time 0 would equal the initial watermark and be
+    // dropped as late
+    val t0 = 1000 * M
+    val evs1 = Seq(Ev(1, t0, 1.0), Ev(1, t0 + 5 * M, 1.0), Ev(2, t0, 1.0))
+    val evs2 = Seq(Ev(1, t0 + 60 * M, 1.0),   // closes user 1's first session
+      Ev(2, t0 + 10 * M, 1.0), Ev(2, t0 + 100 * M, 1.0)) // closes user 2's first session
 
     val stream = MemoryStream[Ev]
-    val q = EventStream.sessionizeStream(stream.toDS(), gap)
+    val q = EventStream.sessionizeStreamTimeout(stream.toDS(), gap)
       .writeStream.format("memory").queryName("sessions").outputMode("append").start()
     stream.addData(evs1)
     q.processAllAvailable()
@@ -417,8 +420,8 @@ class StreamingSpec extends SparkSpec {
 
     val got = spark.table("sessions").as[Session].collect().toSet
     assert(got == Set(
-      Session(1, 0, 2, 5 * M),     // user 1: events at 0,5min then gap
-      Session(2, 0, 2, 10 * M)))   // user 2: events at 0,10min then gap
+      Session(1, t0, 2, 5 * M),    // user 1: events at t0, t0+5min then gap
+      Session(2, t0, 2, 10 * M)))  // user 2: events at t0, t0+10min then gap
 
     // batch equivalence on the closed sessions
     val all = (evs1 ++ evs2).zipWithIndex
