@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Shared session + IO helpers for the graft engine.
   *
@@ -93,10 +94,16 @@ object Graft {
     * unchanged: they cannot be a misread real epoch (epoch-ms starts
     * at ~1.6e12 for the 2020s) and are exactly the small
     * relative/synthetic time axes the spec fixtures use. The guard is
-    * a codegen'd `when` chain — no extra scan or job. */
+    * a codegen'd `when` chain — no extra scan or job.
+    *
+    * The parquet schema is inferred (one Spark job) once per session and
+    * path, then supplied to the read: the registry keys each entry on
+    * (session, path) and stores it with the path's listing (file names,
+    * sizes, mtimes), so a table rewritten under the same path is inferred
+    * again. Entries hold their session weakly and go with it. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, concat, lit, raise_error, unix_micros, when}
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema.fieldNames.contains("ts")) {
       if (df.schema("ts").dataType != org.apache.spark.sql.types.LongType)
         df.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
@@ -109,6 +116,28 @@ object Graft {
               col("ts").cast("string"))).cast("long"))
             .otherwise(col("ts")))                                     // <1e12: relative axis
     } else df
+  }
+
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    scala.collection.concurrent.TrieMap[String, (Seq[(String, Long, Long)], StructType)]]
+
+  /** [[table]]'s read: the schema from the registry, inferred on a miss.
+    * A path that cannot be listed reads as before, so it fails as before. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p))
+      .toOption.fold(spark.read.parquet(path)) { files =>
+        val listing = files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+          .toSeq.sorted
+        val entries = schemas.synchronized(
+          schemas.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty))
+        val schema = entries.get(path).collect { case (`listing`, s) => s }.getOrElse {
+          val s = spark.read.parquet(path).schema
+          entries.put(path, listing -> s)
+          s
+        }
+        spark.read.schema(schema).parquet(path)
+      }
   }
 
   /** The events table projected as a time series: user_id = series key,

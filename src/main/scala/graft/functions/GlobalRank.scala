@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import scala.collection.immutable.ListMap
@@ -12,18 +14,19 @@ import scala.collection.immutable.ListMap
   * scales with data. Both window shapes move a whole frame, or a whole
   * group, through one task.
   *
-  * All five functions run one prefix pass ([[prefixPass]]), which holds:
+  * All five functions build one [[PrefixPass]] plan node, planned inside
+  * the query as [[PrefixPassExec]]. Invariants:
   *  - the sort key is a TOTAL order (include a unique tiebreaker): range
   *    partitioning keeps equal keys in one partition, but the order
   *    among ties, and so their ranks and running totals, is arbitrary;
-  *  - the input is range-repartitioned and sorted within partitions on
-  *    that key once, and that layout is materialized once; the totals
-  *    collect and the running sums both read the checkpoint;
-  *  - the one collect is metadata-sized: one row of per-column totals
-  *    per non-empty partition;
-  *  - each running total is `offset(partition) + PartitionRunningSum`,
-  *    one codegen'd projection over the sorted layout, with no window
-  *    operator and no second shuffle or sort.
+  *  - building a frame launches no job; executing one pass runs one
+  *    range exchange on the sort key, one job that sums each unsorted
+  *    range partition (it collects one row of longs per partition), and
+  *    one sort per partition, with no window operator and nothing
+  *    pinned in memory or on disk;
+  *  - each running total is the sum of the partitions before its row's
+  *    partition plus the within-partition running sum, and the pass also
+  *    yields each sum's grand total as a column (`withNtile`'s n).
   *
   * The group variants run the pass over `group ++ sort`, so each group
   * is one contiguous run of the global order. A group's offset is the
@@ -32,41 +35,28 @@ import scala.collection.immutable.ListMap
   * key is a group of its own, as in `partition by`. */
 object GlobalRank {
 
-  /** `df` in range-sorted `sort` order plus, for each `(c, out)` in
-    * `sums`, `out` = the inclusive running total of the LongType `c`
-    * (nulls add 0); and the grand total of each `c`. */
+  /** `df` plus, for each `(c, out)` in `sums`, `out` = the inclusive
+    * running total of the LongType `c` (nulls add 0) in global `sort`
+    * order, and `__gr_tot<i>` = the grand total of the i-th `c`. */
   private def prefixPass(df: DataFrame, sums: Seq[(Column, String)],
-      sort: Seq[Column]): (DataFrame, Seq[Long]) = {
-    df.select(sums.map(_._1): _*).schema.zip(sums).foreach { case (f, (c, _)) =>
-      require(f.dataType == LongType, s"GlobalRank sums LongType only: '$c' is ${f.dataType}")
+      sort: Seq[Column]): DataFrame = {
+    val Project(list, child) = df.select(sums.map(_._1): _*).queryExecution.analyzed
+    val values = list.map { case Alias(e, _) => e; case e => e }
+    values.zip(sums).foreach { case (v, (c, _)) =>
+      require(v.dataType == LongType, s"GlobalRank sums LongType only: '$c' is ${v.dataType}")
+      require(v.deterministic, s"GlobalRank sums deterministic columns only: '$c'")
     }
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sorted = graft.Graft.materialize(
-      df.repartitionByRange(parts, sort: _*).sortWithinPartitions(sort: _*))
-    val sumCols = sums.map(s => sum(s._1))
-    val totals = sorted.groupBy(spark_partition_id())
-      .agg(sumCols.head, sumCols.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) ->
-        sums.indices.map(i => if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
-      .toMap
-    // Exclusive scan over every partition of the layout: the range
-    // shuffle leaves trailing partitions empty when the key has fewer
-    // distinct values than partitions.
-    val pids = 0 until sorted.rdd.getNumPartitions
-    val starts = pids.scanLeft(sums.map(_ => 0L)) { (acc, p) =>
-      totals.get(p).fold(acc)(acc.zip(_).map { case (a, t) => a + t })
-    }
-    val out = sorted.withColumns(ListMap(sums.zipWithIndex.map { case ((c, name), i) =>
-      name -> (element_at(typedlit(pids.map(starts(_)(i))), spark_partition_id() + 1)
-        + PartitionRunningSum.running_sum(c))
-    }: _*))
-    (out, starts.last)
+    val Sort(order, _, _, _) = df.sort(sort: _*).queryExecution.analyzed
+    def attrs(names: Seq[String]) = names.map(AttributeReference(_, LongType, nullable = false)())
+    GraftSqlBridge.ofRows(df.sparkSession, PrefixPass(values, order,
+      attrs(sums.map(_._2)), attrs(totalCols(sums.size)), child))
   }
+
+  private def totalCols(n: Int): Seq[String] = (0 until n).map(i => s"__gr_tot$i")
 
   /** `df` plus `rankCol` = 1-based global row number under `sort`. */
   def withRowNumber(df: DataFrame, rankCol: String, sort: Column*): DataFrame =
-    prefixPass(df, Seq(lit(1L) -> rankCol), sort)._1
+    prefixPass(df, Seq(lit(1L) -> rankCol), sort).drop(totalCols(1): _*)
 
   /** `df` plus, for each `(srcCol, outCol)` in `sums`, the running
     * total of `srcCol` (LongType, nulls as 0) in global `sort` order,
@@ -76,7 +66,8 @@ object GlobalRank {
   def withPrefixSums(df: DataFrame, sums: Seq[(String, String)],
       inclusive: Boolean, sort: Column*): DataFrame = {
     require(sums.nonEmpty, "withPrefixSums needs at least one column")
-    val cum = prefixPass(df, sums.map { case (s, o) => col(s) -> o }, sort)._1
+    val cum = prefixPass(df, sums.map { case (s, o) => col(s) -> o }, sort)
+      .drop(totalCols(sums.size): _*)
     if (inclusive) cum
     else cum.withColumns(ListMap(sums.map { case (s, o) =>
       o -> (col(o) - coalesce(col(s), lit(0L)))
@@ -92,7 +83,7 @@ object GlobalRank {
     val keys = groupCols.indices.map(i => s"__gr_key$i")
     val offs = sums.indices.map(i => s"__gr_off$i")
     val cum = prefixPass(df, (lit(1L) -> "__gr_rank") +: sums.map(_._1).zip(tmp),
-      groupCols.map(col) ++ sort)._1
+      groupCols.map(col) ++ sort).drop(totalCols(sums.size + 1): _*)
     val excl = sums.zip(tmp).map { case ((c, _), t) => col(t) - coalesce(c, lit(0L)) }
     val firstExcl = excl.zip(offs).map { case (e, o) => min_by(e, col("__gr_rank")).as(o) }
     val off = cum.groupBy(groupCols.zip(keys).map { case (g, k) => col(g).as(k) }: _*)
@@ -126,16 +117,16 @@ object GlobalRank {
   def withNtile(df: DataFrame, zoneCol: String, buckets: Int,
       sort: Column*): DataFrame = {
     require(buckets > 0, s"ntile needs buckets > 0, got $buckets")
-    val (ranks, Seq(n)) = prefixPass(df, Seq(lit(1L) -> "__gr_rank"), sort)
-    val base = n / buckets
-    val rem = n % buckets
+    val base = expr(s"__gr_tot0 div $buckets")
+    val rem = col("__gr_tot0") % buckets
     val cut = (base + 1) * rem
-    ranks.withColumn(zoneCol,
+    prefixPass(df, Seq(lit(1L) -> "__gr_rank"), sort)
+      .withColumn(zoneCol,
         when(col("__gr_rank") <= cut,
           floor((col("__gr_rank") - 1) / (base + 1)) + 1)
           .otherwise(
-            lit(rem) + floor((col("__gr_rank") - 1 - cut) / math.max(base, 1L)) + 1)
+            rem + floor((col("__gr_rank") - 1 - cut) / greatest(base, lit(1L))) + 1)
           .cast("long"))
-      .drop("__gr_rank")
+      .drop("__gr_rank" +: totalCols(1): _*)
   }
 }

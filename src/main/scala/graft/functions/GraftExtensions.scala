@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions registration for the engine's native
   * expressions — makes them first-class SQL functions
-  * (`SELECT cosine_sim(a, b)`) in any session built with
+  * (`SELECT cosine_sim(a, b)`) — and for the planner strategy of
+  * [[PrefixPass]], in any session built with
   * `.withExtensions(new GraftExtensions)` (Graft.envSession does this),
   * or via `spark.sql.extensions=graft.functions.GraftExtensions` on a
   * cluster. */
@@ -16,6 +17,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectPlannerStrategy(_ => PrefixPassStrategy)
     e.injectFunction((FunctionIdentifier("cosine_sim"),
       info("cosine_sim", "cosine_sim(arrayA, arrayB) - cosine similarity, 0.0 on zero norm"),
       (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))

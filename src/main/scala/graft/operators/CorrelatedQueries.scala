@@ -25,14 +25,21 @@ import graft.Graft.Q
   */
 object CorrelatedQueries {
 
-  /** Spark SQL over the raw parquet files (`parquet.`path`` relations —
-    * no temp-view state), with `TABLE` placeholders substituted. */
+  /** Spark SQL over `Graft.table` reads, with each `@TABLE` placeholder
+    * substituted by a temp view of that table named after it and `dir`:
+    * the schema comes from `Graft.table`'s registry, so building the
+    * query launches no inference job (a `parquet.`path`` relation infers
+    * on every analysis). `s.sql` analyzes eagerly, so a later view
+    * replacement never changes a frame already built. */
   private def sql(s: org.apache.spark.sql.SparkSession, dir: String,
       q: String): org.apache.spark.sql.DataFrame = {
     val tables = Seq("lineitem", "orders", "customer", "supplier",
-      "part", "nation", "region")
-    s.sql(tables.foldLeft(q)((acc, t) =>
-      acc.replace(s"@$t", s"parquet.`$dir/$t.parquet`")))
+      "part", "nation", "region").filter(t => q.contains(s"@$t"))
+    s.sql(tables.foldLeft(q) { (acc, t) =>
+      val view = s"${t}_${Integer.toHexString(dir.hashCode)}"
+      graft.Graft.table(s, dir, t).createOrReplaceTempView(view)
+      acc.replace(s"@$t", view)
+    })
   }
 
   /** Q2 shape: min-cost supplier per part — a correlated SCALAR subquery

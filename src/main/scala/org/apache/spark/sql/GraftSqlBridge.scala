@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -9,13 +10,17 @@ import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge into `private[sql]` internals: the Column ⇄ Expression
   * converters (Spark 4's api Column wraps a ColumnNode), so graft's
-  * custom Catalyst expressions can be used as Columns, and the CSV
+  * custom Catalyst expressions can be used as Columns, the Dataset
+  * constructor, so graft's logical operators (`PrefixPass`) can be
+  * wrapped in a DataFrame, and the CSV
   * source's header rules, so `BarsIO` can read a header exactly as
   * inference does without a job. The one-file-in-spark's-namespace shim
   * is the standard technique for out-of-tree extensions. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** The all-string schema the CSV source infers (header on, no type
     * inference) when `lines` are the lines of the file it reads the

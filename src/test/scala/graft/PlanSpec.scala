@@ -412,7 +412,7 @@ class PlanSpec extends SparkSpec {
 
   test("f15 RFM: quintiles come from GlobalRank, not a single-task ntile window") {
     // The quintile scores are assigned by GlobalRank.withNtile (range
-    // shuffle + per-partition sweep behind a materialize), so the final
+    // shuffle + the per-partition prefix-pass operator), so the final
     // plan must carry NO window at all — the unpartitioned ntile it
     // replaced would show as WindowExec with an empty partition spec.
     val p = plan(graft.operators.CohortQueries.f15Rfm(spark, sf))
@@ -702,8 +702,8 @@ class PlanSpec extends SparkSpec {
       s"zones must come from GlobalRank offsets, not a single-partition ntile:\n$p")
     assert(!p.contains("Window"),
       s"no window at all: ranks come from the per-partition sweep:\n$p")
-    assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
-      s"expected the GlobalRank sweep output feeding the zone agg:\n$p")
+    assert(p.contains("PrefixPass"),
+      s"expected the GlobalRank prefix-pass operator feeding the zone agg:\n$p")
   }
 
   test("t8 / t15 group rankings: per-group offsets plan no Window") {
@@ -720,30 +720,22 @@ class PlanSpec extends SparkSpec {
       }
   }
 
-  test("running_sum: a filter above the projection never pushes below it") {
-    // PartitionRunningSum's correctness rests on two optimizer contracts
-    // (PartitionRunningSum.scala:23-28): PushPredicateThroughNonJoin must
-    // not move a filter below a nondeterministic project list, and
-    // CollapseProject must not inline the expression into consumers. Pin
-    // both: the optimized plan keeps Filter ABOVE the running_sum
-    // Project, and the filter condition holds no inlined copy.
-    import graft.functions.PartitionRunningSum
-    import graft.functions.PartitionRunningSum.running_sum
+  test("prefix pass: a filter above withRowNumber never pushes below the PrefixPass node") {
+    // Ranks count the rows the node sees, so no filter may move below it:
+    // the optimized plan keeps the Filter above PrefixPass, and nothing
+    // filters underneath it.
+    import graft.functions.{GlobalRank, PrefixPass}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val df = spark.range(100).toDF("v")
-      .repartition(4)
-      .sortWithinPartitions("v")
-      .select(col("v"), running_sum(col("v")).as("rs"))
-      .filter(col("rs") <= lit(10L))
+    val df = GlobalRank.withRowNumber(spark.range(100).toDF("v").repartition(4), "rk", col("v"))
+      .filter(col("rk") === 1L)
     val optimized = df.queryExecution.optimizedPlan
     val fil = optimized.collectFirst { case f: LFilter => f }
       .getOrElse(fail(s"no Filter survived optimization:\n$optimized"))
-    assert(!fil.condition.exists(_.isInstanceOf[PartitionRunningSum]),
-      s"CollapseProject inlined the running sum into the filter:\n$optimized")
-    assert(fil.child.exists(n => n.expressions.exists(
-        _.exists(_.isInstanceOf[PartitionRunningSum]))),
-      s"the running_sum projection must sit BELOW the filter:\n$optimized")
-    // And the whole thing still executes: sums accumulate per partition.
-    assert(df.count() > 0)
+    val node = fil.collectFirst { case p: PrefixPass => p }
+      .getOrElse(fail(s"the PrefixPass node must sit BELOW the filter:\n$optimized"))
+    assert(node.collectFirst { case f: LFilter => f }.isEmpty,
+      s"a filter moved below the PrefixPass node:\n$optimized")
+    assert(df.select("v", "rk").as[(Long, Long)].collect().toSeq == Seq((0L, 1L)))
   }
+
 }

@@ -73,7 +73,7 @@ class WindowInvariantSpec extends SparkSpec {
       .groupBy("o_orderstatus").agg(sum("o_totalprice").as("s"))
       .withColumn("run", sum(col("s")).over(Window.orderBy("o_orderstatus")))
     assert(Graft.materialize(agg).count() > 0)
-    // GlobalRank's own materialized range layout (no window at all)
+    // a frame ranked by GlobalRank's prefix-pass operator (no window at all)
     val ranked = graft.functions.GlobalRank.withRowNumber(
       Graft.table(spark, sf, "orders"), "rk", col("o_orderkey"))
     assert(ranked.filter(col("rk") === 1L).count() == 1)
